@@ -62,6 +62,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from etl_online_retail_spark import catalog
 from etl_online_retail_spark.functions import money
@@ -551,6 +552,7 @@ def write_full(spark: SparkSession, sf_dir: str,
         source, name = task
         table_dir = view_table_dir(sf_dir, name, storage_dir)
         shutil.rmtree(table_dir, ignore_errors=True)
+        _TABLE_SCHEMAS.pop(os.path.abspath(table_dir), None)
         _check_or_stamp_layout(table_dir, name)
         inp = MATVIEW_INPUTS[name](spark, sf_dir, shared_by_source[source])
         ingest.partial_multi_agg_batch_write(
@@ -863,28 +865,57 @@ def compact(spark: SparkSession, sf_dir: str,
 # serving
 
 
-def _merge_partials(spark: SparkSession, table_dir: str, name: str,
-                    keep: list[int]) -> DataFrame:
-    """Merge a chosen partition set into the view's serving schema.
-    Serving relations are DASHBOARD-sized by the registry's own
-    admission rule (a "rollup" approaching fact size is rejected —
-    ROADMAP 66), so collapse to ONE partition: every served query then
-    runs single-task stages with no final exchange, instead of paying a
-    32-task fan-out + merge for a 25-2.5k-row relation."""
+# Each view table's stored schema, keyed by absolute table dir. Reading a
+# parquet dir without a schema launches a footer-inference job on every
+# read; a view table's schema is fixed by its layout for the table's
+# whole life, so it is inferred on the first read in the process and
+# passed to every later one. write_full (the one path that recreates a
+# table) forgets its entry.
+_TABLE_SCHEMAS: dict[str, StructType] = {}
+
+
+def _read_table(spark: SparkSession, table_dir: str) -> DataFrame:
+    key = os.path.abspath(table_dir)
+    schema = _TABLE_SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(table_dir)
+        _TABLE_SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(table_dir)
+
+
+def _net_partials(spark: SparkSession, table_dir: str, name: str,
+                  keep: list[int]) -> DataFrame:
+    """Net a chosen partition set per grain: the view's measures plus
+    `_live`, the grain's signed fact-row count. The one aggregation
+    behind serving (`_live > 0`) and the liveness/admission checks
+    (counts of negative and positive `_live`)."""
     meta = MATVIEW_META[name]
     aggs = [F.sum(stored).alias(measure)
             for measure, stored in meta["storage"].items()]
-    # CDC retractions (apply_cdc_batch) can net a grain's row count to
-    # zero; the base recompute would not have the grain at all, so the
-    # serving relation drops it. Append-only tables always net >= 1 —
-    # the filter is an exact no-op for them.
-    return (spark.read.parquet(table_dir)
+    return (_read_table(spark, table_dir)
             .filter(F.col("_batch_id").isin(keep))
             .groupBy(*meta["grain"])
-            .agg(*aggs, F.sum("_n").alias("_live"))
-            .filter(F.col("_live") > 0)
-            .drop("_live")
-            .coalesce(1))
+            .agg(*aggs, F.sum("_n").alias("_live")))
+
+
+def _live_grains(net: DataFrame) -> DataFrame:
+    """The serving schema of a netted view. CDC retractions
+    (apply_cdc_batch) can net a grain's row count to zero; the base
+    recompute would not have the grain at all, so it is dropped.
+    Append-only tables always net >= 1, where the filter is an exact
+    no-op. Serving relations are DASHBOARD-sized by the registry's own
+    admission rule (a "rollup" approaching fact size is rejected, see
+    MAX_SERVE_ROWS), so collapse to ONE partition: every served query then
+    runs single-task stages with no final exchange, instead of paying a
+    32-task fan-out + merge for a 25-2.5k-row relation."""
+    return net.filter(F.col("_live") > 0).drop("_live").coalesce(1)
+
+
+def _merge_partials(spark: SparkSession, table_dir: str, name: str,
+                    keep: list[int]) -> DataFrame:
+    """Merge a chosen partition set into the view's serving schema."""
+    return _live_grains(_net_partials(spark, table_dir, name, keep))
 
 
 def _serving_relation(spark: SparkSession, table_dir: str,
@@ -929,6 +960,34 @@ def serve_as_of(spark: SparkSession, sf_dir: str, name: str,
     return _merge_partials(spark, table_dir, name, keep)
 
 
+def _check_net(net: DataFrame, name: str,
+               max_serve_rows: int | None) -> None:
+    """Both refresh-time checks of a netted view in ONE streamed action
+    that holds nothing (no cache is built before the view is admitted):
+    the count of grains whose net row count is NEGATIVE (liveness) and
+    the count of live grains, i.e. the serving relation's row count
+    (admission; None skips it)."""
+    live = F.col("_live")
+    n_bad, n_live = net.agg(F.count(F.when(live < 0, 1)),
+                            F.count(F.when(live > 0, 1))).first()
+    if n_bad:
+        bad = (net.filter(live < 0)
+               .select(*MATVIEW_META[name]["grain"], live.alias("_m")))
+        raise ValueError(
+            f"matview {name!r} is inconsistent: {n_bad} grain(s) net to "
+            f"NEGATIVE row counts (a CDC retraction of rows never "
+            f"loaded). Sample: {bad.limit(3).collect()}")
+    if max_serve_rows is not None and n_live > max_serve_rows:
+        raise ValueError(
+            f"matview {name!r} serving relation has {n_live} rows — "
+            f"over the dashboard-size admission bound "
+            f"({max_serve_rows}). A fact-proportional 'rollup' "
+            f"must not be served off a single-partition cache; "
+            f"narrow the view's grain (or pass "
+            f"max_serve_rows=None for a distributed serving "
+            f"tier)")
+
+
 def check_liveness(spark: SparkSession, table_dir: str,
                    name: str) -> None:
     """Refuse a view table whose net row count goes NEGATIVE on any
@@ -938,23 +997,14 @@ def check_liveness(spark: SparkSession, table_dir: str,
     plausible-but-wrong relation; publish is the one refresh-time spot
     where the violation is cheaply detectable (one aggregation over a
     dashboard-sized partial table) — same stance as the signed-delta
-    join fold (operators/ivm.fold_signed_rows strict mode)."""
-    meta = MATVIEW_META[name]
-    eff = ingest.effective_partials(table_dir)
-    bad = (spark.read.parquet(table_dir)
-           .filter(F.col("_batch_id").isin(eff))
-           .groupBy(*meta["grain"])
-           .agg(F.sum("_n").alias("_m"))
-           .filter(F.col("_m") < 0))
-    n_bad = bad.count()
-    if n_bad:
-        raise ValueError(
-            f"matview {name!r} is inconsistent: {n_bad} grain(s) net to "
-            f"NEGATIVE row counts (a CDC retraction of rows never "
-            f"loaded). Sample: {bad.limit(3).collect()}")
+    join fold (operators/ivm.fold_signed_rows strict mode). publish runs
+    the same check on the same aggregation (_check_net)."""
+    _check_net(_net_partials(spark, table_dir, name,
+                             ingest.effective_partials(table_dir)),
+               name, None)
 
 
-# Serving relations collapse to ONE partition (_merge_partials) and are
+# Serving relations collapse to ONE partition (_live_grains) and are
 # cached whole: sound only for dashboard-sized summaries. The registry's
 # admission rule ("a rollup approaching fact size is rejected", ROADMAP
 # 66 / PERFORMANCE.md addendum 2) was prose until r11 — publish() now
@@ -963,6 +1013,41 @@ def check_liveness(spark: SparkSession, table_dir: str,
 # they're independent of fact size), tripped immediately by a
 # fact-proportional "rollup" at bench scale.
 MAX_SERVE_ROWS = 200_000
+
+# Session conf `<prefix>.<temp view>` holds the ledger fingerprint the
+# view's cached serving relation was built from, so the record lives and
+# dies with the session that owns the temp view. Set only after a
+# successful cache build; every failure, rollback and drop unsets it.
+MATVIEW_LEDGER_CONF = "spark.graft.matview.ledger"
+
+
+def _ledger_fingerprint(table_dir: str, keep: list[int],
+                        max_serve_rows: int | None) -> str:
+    """Digest of what a view's serving relation is a function of: the
+    table dir, the effective partition ids, every data file in them
+    (name, size, mtime_ns) and the admission bound it was checked
+    under. Every ledger write lands in new part files (a replayed
+    `_batch_id` rewrites its partition; compaction adds one and removes
+    the folded ones; write_full recreates the dir), so any change to
+    the served rows changes the fingerprint. Driver-side listing only."""
+    files = []
+    for b in keep:
+        with os.scandir(os.path.join(table_dir, f"_batch_id={b}")) as it:
+            for e in it:
+                if e.is_file() and not e.name.startswith((".", "_")):
+                    st = e.stat()
+                    files.append((b, e.name, st.st_size, st.st_mtime_ns))
+    key = (os.path.abspath(table_dir), sorted(keep), sorted(files),
+           max_serve_rows)
+    return hashlib.sha1(repr(key).encode()).hexdigest()
+
+
+def _release(spark: SparkSession, view: str) -> None:
+    """Unpersist and drop a serving view and forget its fingerprint."""
+    spark.conf.unset(f"{MATVIEW_LEDGER_CONF}.{view}")
+    if spark.catalog.tableExists(view):
+        spark.table(view).unpersist()
+        spark.catalog.dropTempView(view)
 
 
 def publish(spark: SparkSession, sf_dir: str,
@@ -975,75 +1060,66 @@ def publish(spark: SparkSession, sf_dir: str,
     table was never written (e.g. a deployment maintaining only the
     lineitem-fed views) is simply not registered — serve() then returns
     None for it and its queries keep their base plans. Refuses a table
-    whose CDC history is inconsistent (check_liveness) and one whose
-    serving relation exceeds the dashboard-size admission bound
-    (max_serve_rows; None disables — a deployment with a catalog-backed
-    distributed serving tier instead of single-partition caches).
+    whose CDC history is inconsistent (liveness: a grain netting to a
+    negative row count) and one whose serving relation exceeds the
+    dashboard-size admission bound (max_serve_rows; None disables — a
+    deployment with a catalog-backed distributed serving tier instead
+    of single-partition caches).
 
-    Per-view refreshes run from a thread pool (r11): each view's
-    liveness check + serving-cache build is a pair of small jobs over a
-    dashboard-sized partial table, so concurrency collapses the
-    per-job scheduling overhead; the layout conf is announced only
-    after EVERY view published (fail closed — an admission or liveness
-    refusal leaves the warehouse unstaged, exactly like the sequential
-    path). Fail-closed includes storage (r11 advice): when one view's
-    check raises, sibling threads may already have cached their temp
-    views — serve() would never use them (conf unset), but the
-    single-partition caches would stay pinned in executor storage until
-    session end, so the failure path unpersists and drops everything
-    this pass registered before propagating."""
-    import threading
+    Only views whose ledger changed are rebuilt. A view whose ledger
+    fingerprint (_ledger_fingerprint) matches the one its cached
+    serving relation was built from, and whose temp view is still
+    registered and cached, is left as it is: zero Spark jobs. A
+    lineitem commit therefore leaves the customer- and orders-fed
+    views alone, and a publish with nothing changed launches no job.
 
-    registered: list[str] = []
-    reg_lock = threading.Lock()
+    A changed view costs one aggregation, read with the table's stored
+    schema (no schema-inference job): the partials net to grain +
+    measures + `_live` (_net_partials), one streamed action returns the
+    liveness and admission counts before any cache is built
+    (_check_net — the over-bound case is exactly the one whose
+    single-partition cache build would pin a pathological block), and
+    only then is the serving relation (`_live > 0`, one partition)
+    cached and counted. Changed views run from a thread pool, which
+    collapses the per-job scheduling overhead across views.
+
+    Fail closed, storage included: the layout conf is announced only
+    after EVERY view published. When any view's check or cache build
+    raises, the pass unpersists and drops every view it covered —
+    sibling views it rebuilt, and views it left untouched as unchanged
+    — clears their fingerprints, and unsets the layout conf before
+    propagating, so a failure leaves an explicitly unstaged warehouse
+    with nothing pinned in executor storage."""
+    views = list(names or MATVIEW_INPUTS)
 
     def publish_one(name: str) -> None:
         view = f"{MATVIEW_PREFIX}_{name}"
         table_dir = view_table_dir(sf_dir, name, storage_dir)
-        if not ingest.effective_partials(table_dir):
-            if spark.catalog.tableExists(view):
-                spark.table(view).unpersist()
-                spark.catalog.dropTempView(view)
+        keep = ingest.effective_partials(table_dir)
+        if not keep:
+            _release(spark, view)
             return
         _check_or_stamp_layout(table_dir, name)
-        check_liveness(spark, table_dir, name)
-        if spark.catalog.tableExists(view):
-            spark.table(view).unpersist()
-        df = _serving_relation(spark, table_dir, name)
-        if max_serve_rows is not None:
-            # admit BEFORE building the cache: the over-bound case is
-            # exactly the one whose single-partition cache build would
-            # pin a pathological block (or OOM) before the refusal
-            # could fire — a streamed uncached count holds nothing
-            # (r11 review find). Costs one extra dashboard-sized
-            # aggregation per publish, run concurrently across views.
-            n = df.count()
-            if n > max_serve_rows:
-                raise ValueError(
-                    f"matview {name!r} serving relation has {n} rows — "
-                    f"over the dashboard-size admission bound "
-                    f"({max_serve_rows}). A fact-proportional 'rollup' "
-                    f"must not be served off a single-partition cache; "
-                    f"narrow the view's grain (or pass "
-                    f"max_serve_rows=None for a distributed serving "
-                    f"tier)")
+        stamp = _ledger_fingerprint(table_dir, keep, max_serve_rows)
+        stamp_conf = f"{MATVIEW_LEDGER_CONF}.{view}"
+        if (spark.conf.get(stamp_conf, None) == stamp
+                and spark.catalog.tableExists(view)
+                and spark.catalog.isCached(view)):
+            return
+        _release(spark, view)
+        net = _net_partials(spark, table_dir, name, keep)
+        _check_net(net, name, max_serve_rows)
+        df = _live_grains(net)
         df.createOrReplaceTempView(view)
-        # register BEFORE the cache build: a failure inside
-        # cache().count() (executor OOM mid-materialization) leaves the
-        # temp view and a partially-built cache entry behind — exactly
-        # what the rollback must clean; appending after the build would
-        # exempt the one view whose failure triggered it (r12 review)
-        with reg_lock:
-            registered.append(view)
         df.cache().count()
+        spark.conf.set(stamp_conf, stamp)
 
     try:
-        _run_concurrently(publish_one, list(names or MATVIEW_INPUTS))
+        _run_concurrently(publish_one, views)
     except BaseException:
-        for view in registered:
+        for name in views:
             try:
-                spark.table(view).unpersist()
-                spark.catalog.dropTempView(view)
+                _release(spark, f"{MATVIEW_PREFIX}_{name}")
             except Exception:
                 pass  # rollback is best-effort; the refusal propagates
         # a failed RE-publish may have dropped views a previous

@@ -335,11 +335,13 @@ def semantic_dedup(vectors: DataFrame, n_clusters: int = 16,
     r15 search shape (§2.3/§2.5; the fit is untouched — see ivf_topk):
     the representative is elected with ONE map-side-combinable
     min(struct(dist, id, vec)) aggregation instead of a row_number
-    window — the window's exchange hash-partitioned EVERY vector by
-    cluster id (n_clusters distinct keys = at most n_clusters reduce
-    tasks and a full-corpus shuffle of payloads; the hub shape §2.5
-    warns about), where the partial agg reduces each map task to at
-    most n_clusters candidate rows before anything moves. The struct
+    window. This does not shrink the shuffle: the window plan already
+    ran a `WindowGroupLimit Partial` below its exchange, so each map
+    task shipped at most one candidate row per cluster either way
+    (plans/r15/semantic_dedup_before.txt). What it removes is the
+    Window operator and its rank filter; both plans still sort on each
+    side of the exchange (a min over a struct holding an array runs as
+    a SortAggregate, plans/r15/semantic_dedup_after.txt). The struct
     order (dist, then id) is the identical total order, so the elected
     representative — and every output value — is unchanged. The
     assignment relation materializes via cut_lineage instead of an

@@ -13,6 +13,7 @@ harness but overridable for a real cluster via env.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -114,16 +115,36 @@ def cut_lineage(df):
     context cleaner also deletes checkpoint files once their RDDs
     are collected; otherwise files accumulate for the application's
     lifetime. See PERFORMANCE.md "Iterative loops" for the trade.
+
+    A SparkContext has one checkpoint dir. When it already has one
+    under a different path than $SPARK_GRAFT_CHECKPOINT_DIR (set
+    earlier by other code, or by this function under an older value),
+    the cut still checkpoints there, and a RuntimeWarning names both
+    paths.
     """
     ckdir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
     if ckdir:
         sc = df.sparkSession.sparkContext
         try:
-            has_dir = sc._jsc.sc().getCheckpointDir().isDefined()
+            current = sc._jsc.sc().getCheckpointDir()
+            current = current.get() if current.isDefined() else None
         except Exception:
-            has_dir = False
-        if not has_dir:
+            current = None
+        if current is None:
             sc.setCheckpointDir(ckdir)
+        else:
+            # setCheckpointDir(d) checkpoints to <qualified d>/<uuid>
+            hadoop_path = sc._jvm.org.apache.hadoop.fs.Path
+            want = hadoop_path(ckdir)
+            want = (want.getFileSystem(sc._jsc.hadoopConfiguration())
+                    .makeQualified(want).toString())
+            got = hadoop_path(current).getParent().toString()
+            if got != want:
+                warnings.warn(
+                    f"cut_lineage: $SPARK_GRAFT_CHECKPOINT_DIR is {ckdir!r} "
+                    f"but the SparkContext already checkpoints under "
+                    f"{got!r}; reliable cuts go there",
+                    RuntimeWarning, stacklevel=2)
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
 

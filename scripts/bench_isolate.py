@@ -28,13 +28,15 @@ def _n_jobs(spark) -> int:
     """Total jobs submitted so far. Reads the DAGScheduler's job-id
     counter (monotonic, unbounded) rather than the UI AppStatusStore,
     which retains at most spark.ui.retainedJobs entries and silently
-    undercounts job-heavy iterative queries (r14 ADVICE). Falls back to
-    the status store if the private accessor moves."""
-    sc = spark.sparkContext._jsc.sc()
+    undercounts job-heavy iterative queries. Raises when the counter
+    is unreadable: the status store is no substitute."""
     try:
-        return sc.dagScheduler().nextJobId().get()
-    except Exception:
-        return sc.statusStore().jobsList(None).size()
+        return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+    except Exception as e:
+        raise RuntimeError(
+            "SparkContext.dagScheduler().nextJobId() is not readable as an "
+            "int on this Spark build; the job counter has no exact "
+            "substitute") from e
 
 
 def main() -> None:

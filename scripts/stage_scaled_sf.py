@@ -46,15 +46,38 @@ KEYS: dict[str, dict[str, int]] = {
 }
 
 
+# largest value of each integral key dtype
+_DTYPE_MAX = {"tinyint": 2**7 - 1, "smallint": 2**15 - 1,
+              "int": 2**31 - 1, "bigint": 2**63 - 1}
+
+
 def replicate(df: DataFrame, factor: int, key_cols: dict[str, int]) -> DataFrame:
+    """`factor` copies of df, copy c's keys offset by c * span. Raises
+    before replicating when a copy's keys could collide with the next
+    copy's (max(key) >= span) or the top copy's keys would overflow the
+    column's dtype (factor * span > dtype max): either would make the
+    Nx corpus silently wrong instead of Nx larger."""
     if not key_cols:  # dimension table: single copy
         return df
+    dtypes = dict(df.dtypes)
+    maxima = df.agg(*[F.max(c).alias(c) for c in key_cols]).first()
+    for col, span in key_cols.items():
+        top = _DTYPE_MAX.get(dtypes[col])
+        if top is None:
+            raise ValueError(f"key column {col} has non-integral dtype "
+                             f"{dtypes[col]}")
+        if factor * span > top:
+            raise ValueError(f"{col}: {factor} copies x span {span} "
+                             f"overflow {dtypes[col]} (max {top})")
+        if maxima[col] is not None and maxima[col] >= span:
+            raise ValueError(f"{col}: max key {maxima[col]} >= span {span}; "
+                             f"copies would share keys")
     copies = df.crossJoin(F.broadcast(
         df.sparkSession.range(factor).withColumnRenamed("id", "_copy")))
     out = copies
     for col, span in key_cols.items():
         out = out.withColumn(col, (F.col(col) + F.col("_copy") * span)
-                             .cast(dict(df.dtypes)[col]))
+                             .cast(dtypes[col]))
     return out.drop("_copy")
 
 

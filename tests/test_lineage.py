@@ -5,7 +5,9 @@ reliable checkpoint via $SPARK_GRAFT_CHECKPOINT_DIR."""
 from __future__ import annotations
 
 import os
+import warnings
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_online_retail_spark.session import cut_lineage
@@ -30,3 +32,25 @@ def test_reliable_mode_writes_checkpoint_files(spark, tmp_path, monkeypatch):
     # the cut went through the RELIABLE path: files under the dir
     files = [f for _, _, fs in os.walk(ckdir) for f in fs]
     assert files, "reliable checkpoint mode wrote nothing"
+
+
+def test_reliable_mode_warns_on_a_different_context_dir(spark, tmp_path,
+                                                        monkeypatch):
+    """The context keeps its first checkpoint dir; a cut asked to use
+    another one says so instead of silently writing to the old dir."""
+    df = spark.range(10)
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "a"))
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")  # an earlier test may own the dir
+        cut_lineage(df)
+    current = spark.sparkContext._jsc.sc().getCheckpointDir().get()
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "b"))
+    with pytest.warns(RuntimeWarning, match="already checkpoints under"):
+        assert cut_lineage(df).count() == 10
+    # the dir the context already has, as a plain local path: no warning
+    assert current.startswith("file:")
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR",
+                       current.rsplit("/", 1)[0][len("file:"):])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        cut_lineage(df)

@@ -1374,6 +1374,159 @@ def test_publish_failure_rolls_back_sibling_views(spark, tmp_path):
     spark.conf.unset(matview.MATVIEW_DIR_CONF)
 
 
+def _jobs(spark) -> int:
+    """Jobs submitted so far (the DAGScheduler's uncapped job-id counter)."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def _cache_id(spark, name):
+    """RDD id of the view's cached serving relation, or None when the
+    view is not registered and cached: a rebuild makes a new one."""
+    view = f"{matview.MATVIEW_PREFIX}_{name}"
+    if not spark.catalog.tableExists(view):
+        return None
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    cached = cm.lookupCachedData(spark.table(view)._jdf)
+    if not cached.isDefined():
+        return None
+    return (cached.get().cachedRepresentation().cacheBuilder()
+            .cachedColumnBuffers().id())
+
+
+def _drop_views(spark, names) -> None:
+    spark.conf.unset(matview.MATVIEW_DIR_CONF)
+    for name in names:
+        view = f"{matview.MATVIEW_PREFIX}_{name}"
+        if spark.catalog.tableExists(view):
+            spark.table(view).unpersist()
+            spark.catalog.dropTempView(view)
+
+
+def test_publish_skips_unchanged_views(spark, tmp_path):
+    """A publish over an unchanged warehouse launches no Spark job and
+    keeps every cached serving relation; a lineitem-only commit rebuilds
+    exactly the four lineitem-fed views and leaves the customer- and
+    orders-fed ones untouched."""
+    from pyspark.sql import functions as F
+
+    from etl_online_retail_spark import catalog
+
+    store = str(tmp_path / "mv")
+    names = list(matview.MATVIEWS)
+    matview.materialize(spark, SF_SMALL, storage_dir=store)
+    try:
+        before = {n: _cache_id(spark, n) for n in names}
+        assert None not in before.values()
+        j0 = _jobs(spark)
+        matview.publish(spark, SF_SMALL, storage_dir=store)
+        assert _jobs(spark) == j0
+        assert {n: _cache_id(spark, n) for n in names} == before
+        assert matview.serve(spark, SF_SMALL, "ship_day_rollup") is not None
+
+        li = catalog.load_table(spark, "lineitem", SF_SMALL)
+        matview.apply_cdc_batch(
+            spark, SF_SMALL, 0,
+            deletes=li.filter(F.pmod(F.col("l_orderkey"), F.lit(4)) == 1),
+            storage_dir=store)
+        matview.publish(spark, SF_SMALL, storage_dir=store)
+        after = {n: _cache_id(spark, n) for n in names}
+        rebuilt = {n for n in names if after[n] != before[n]}
+        assert rebuilt == {n for n in names
+                           if matview.MATVIEW_META[n]["source"] == "lineitem"}
+        assert None not in after.values()
+    finally:
+        _drop_views(spark, names)
+
+
+def test_publish_rebuilds_a_replayed_batch(spark, tmp_path):
+    """Replaying an existing `_batch_id` with DIFFERENT rows rewrites its
+    part files, so publish rebuilds the view, and the served relation
+    equals the recompute over the replayed rows bit for bit."""
+    from pyspark.sql import functions as F
+
+    from etl_online_retail_spark import catalog
+
+    store = str(tmp_path / "mv")
+    names = ["ship_day_rollup", "flag_day_rollup"]
+    li = catalog.load_table(spark, "lineitem", SF_SMALL)
+    shard = F.pmod(F.col("l_orderkey"), F.lit(2))
+    matview.apply_cdc_batch(spark, SF_SMALL, 0, inserts=li.filter(shard == 0),
+                            names=names, storage_dir=store)
+    try:
+        matview.publish(spark, SF_SMALL, names=names, storage_dir=store)
+        before = {n: _cache_id(spark, n) for n in names}
+        matview.apply_cdc_batch(spark, SF_SMALL, 0,
+                                inserts=li.filter(shard == 1),
+                                names=names, storage_dir=store)
+        j0 = _jobs(spark)
+        matview.publish(spark, SF_SMALL, names=names, storage_dir=store)
+        assert _jobs(spark) > j0
+        for name in names:
+            assert _cache_id(spark, name) not in (None, before[name]), name
+            served = sorted(map(tuple, matview.serve(
+                spark, SF_SMALL, name).collect()))
+            assert served == _logical_over(spark, name,
+                                           li.filter(shard == 1)), name
+    finally:
+        _drop_views(spark, names)
+
+
+def test_publish_rebuilds_dropped_or_readmitted_views(spark, tmp_path):
+    """A dropped temp view, or a new admission bound, forces a rebuild
+    even though the ledger is unchanged."""
+    store = str(tmp_path / "mv")
+    name = "customer_nation_rollup"
+    view = f"{matview.MATVIEW_PREFIX}_{name}"
+    matview.write_full(spark, SF_SMALL, names=[name], storage_dir=store)
+    try:
+        matview.publish(spark, SF_SMALL, names=[name], storage_dir=store)
+        first = _cache_id(spark, name)
+        spark.table(view).unpersist()
+        spark.catalog.dropTempView(view)
+        matview.publish(spark, SF_SMALL, names=[name], storage_dir=store)
+        second = _cache_id(spark, name)
+        assert second not in (None, first)
+        j0 = _jobs(spark)
+        matview.publish(spark, SF_SMALL, names=[name], storage_dir=store,
+                        max_serve_rows=1000)
+        assert _jobs(spark) > j0
+        assert _cache_id(spark, name) not in (None, second)
+    finally:
+        _drop_views(spark, [name])
+
+
+def test_publish_failure_rolls_back_views_it_left_unchanged(spark,
+                                                            tmp_path):
+    """Fail-closed covers the views a pass skipped as unchanged: when a
+    sibling's liveness check refuses, the unchanged view is unpersisted
+    and dropped too, and the next clean pass rebuilds it."""
+    from etl_online_retail_spark import catalog
+
+    store = str(tmp_path / "mv")
+    names = ["customer_nation_rollup", "ship_day_rollup"]
+    matview.write_full(spark, SF_SMALL, names=names, storage_dir=store)
+    matview.publish(spark, SF_SMALL, names=names, storage_dir=store)
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    kept = spark.table(f"{matview.MATVIEW_PREFIX}_customer_nation_rollup")
+    # retract every lineitem twice: ship-day grains net negative
+    li = catalog.load_table(spark, "lineitem", SF_SMALL)
+    for b in (0, 1):
+        matview.apply_cdc_batch(spark, SF_SMALL, b, deletes=li,
+                                names=["ship_day_rollup"], storage_dir=store)
+    with pytest.raises(ValueError, match="NEGATIVE"):
+        matview.publish(spark, SF_SMALL, names=names, storage_dir=store)
+    for n in names:
+        assert not spark.catalog.tableExists(f"{matview.MATVIEW_PREFIX}_{n}")
+    assert not cm.lookupCachedData(kept._jdf).isDefined()
+    assert spark.conf.get(matview.MATVIEW_DIR_CONF, None) is None
+    try:
+        matview.publish(spark, SF_SMALL, names=["customer_nation_rollup"],
+                        storage_dir=store)
+        assert _cache_id(spark, "customer_nation_rollup") is not None
+    finally:
+        _drop_views(spark, names)
+
+
 def test_star_cdc_join_maintains_under_two_sided_change(spark, tmp_path):
     """r11 (VERDICT item 3): the join-IVM star maintenance path. A
     four-batch schedule exercises exactly what the per-batch path
