@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_online_retail_spark.operators import joins
+from etl_online_retail_spark.session import cut_lineage
 
 OUTCOME_A = "a"
 OUTCOME_B = "b"
@@ -252,7 +253,6 @@ def bradley_terry_from_matrix(matrix: DataFrame,
          .cache())
     scores = w.select("model",
                       F.lit(BT_FP_SCALE).cast("long").alias("bt_fp"))
-    prev = None
     for _ in range(iters):
         sc = joins.size_guarded_broadcast(scores)
         t = (d.join(sc.select(F.col("model"), F.col("bt_fp").alias("_pi")),
@@ -261,21 +261,15 @@ def bradley_terry_from_matrix(matrix: DataFrame,
                              F.col("bt_fp").alias("_pj")), "opp"))
         term = F.expr(f"n2 * {_S2}L div (_pi + _pj)")
         denom = t.groupBy("model").agg(F.sum(term).alias("_d"))
-        scores = (w.join(denom, "model")
-                  .select("model",
-                          F.greatest(
-                              F.lit(1).cast("long"),
-                              F.expr(f"w2 * {_S2}L div _d"))
-                          .alias("bt_fp"))
-                  .cache())
-        # materialize, then release the superseded iteration — without
-        # this every call pins iters+2 dead relations in executor
-        # storage for the session (the minhash-index precedent,
-        # streaming/ingest.py; review r13)
-        scores.count()
-        if prev is not None:
-            prev.unpersist()
-        prev = scores
+        # each round is cut, not cached: a cached round embeds the
+        # previous round's plan, and the returned round would pin a
+        # cache entry for the session
+        scores = cut_lineage(
+            w.join(denom, "model")
+            .select("model",
+                    F.greatest(F.lit(1).cast("long"),
+                               F.expr(f"w2 * {_S2}L div _d"))
+                    .alias("bt_fp")))
     d.unpersist()
     w.unpersist()
     return scores.withColumn(

@@ -23,16 +23,29 @@ Scale notes (100 TB lens):
   * max_hops bounds the rounds (k joins total). Unbounded reachability
     belongs to the connected-components operators whose round count is
     O(log^2 n), not BFS.
-  * Each frontier is cache()d: it feeds both the next expansion and the
-    settled-set anti-join; without the cache Spark re-derives the whole
-    prefix chain per round (the self-join lineage rule, PERFORMANCE.md 7).
+  * Every piece of loop state is CUT, never cached: the edge relation,
+    the seed frontier and each hop's frontier go through
+    session.cut_lineage (an eager checkpoint), so a hop plans a join
+    over materialized scans. Caching looked equivalent but is not: a
+    cached frontier's InMemoryRelation embeds the plan of the settled
+    set it was anti-joined against, which embeds every earlier cached
+    frontier's plan, so the plan text grew ~5x per hop (on a 14-node
+    chain: 117 KB at 2 hops, 11.3 MB at 5; at 6 a 3 GB driver ran out
+    of heap). Spark renders that text into every SQL execution's plan
+    description, and the SQL status store keeps it. A cut frontier's
+    plan is one scan, so planning and plan rendering stay flat in the
+    hop count.
+  * The per-hop emptiness probe is an observed row count riding the
+    frontier's cut (no separate count job), and the settled set is a
+    flat union of the cut frontiers. Nothing is cached, so there is
+    nothing to release on return.
   * Distances are integers — the whole result is oracle-exact against a
     recursive-CTE twin.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from etl_online_retail_spark.session import cut_lineage
@@ -49,45 +62,31 @@ def khop_distances(edges: DataFrame, seeds: DataFrame,
     """
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
-    # cache the edge relation: it feeds EVERY hop's join, and without the
-    # cache each iteration re-derives the whole edge-construction lineage
-    # (e.g. the co-purchase self-join + support agg) — measured ~2x on the
-    # 4-hop smoke. At 100 TB this is persist(DISK) or a staged edge table.
-    e = edges.select(F.col("src"), F.col("dst")).cache()
-    frontier = (seeds.select(F.col("node")).distinct()
-                .withColumn("dist", F.lit(0)).cache())
+    # the edge relation feeds EVERY hop's join: one materialization of
+    # its construction lineage (e.g. the co-purchase self-join + support
+    # agg) instead of one per hop. At 100 TB this is a reliable cut
+    # ($SPARK_GRAFT_CHECKPOINT_DIR) or a staged edge table.
+    e = cut_lineage(edges.select(F.col("src"), F.col("dst")))
+    frontier = cut_lineage(seeds.select(F.col("node")).distinct()
+                           .withColumn("dist", F.lit(0)))
     out = [frontier]
-    # settled set = lazy union of the cached per-hop frontiers: the
-    # anti-join consumes in-memory scans, so no cumulative cached union
-    # to materialize/unpersist per hop (r14: the old shape paid TWO
-    # driver actions per hop — a take(1) emptiness probe plus the
-    # settled-union count; one frontier count now does both jobs)
     settled_nodes = frontier.select("node")
     for i in range(1, max_hops + 1):
         reached = (frontier.join(e, frontier["node"] == e["src"])
                    .select(F.col("dst").alias("node"))
                    .distinct())
-        frontier = (reached.join(settled_nodes, "node", "left_anti")
-                    .withColumn("dist", F.lit(i))
-                    .cache())
-        if frontier.count() == 0:  # materializes the cache AND probes
-            frontier.unpersist()
+        obs = Observation()
+        frontier = cut_lineage(
+            reached.join(settled_nodes, "node", "left_anti")
+            .withColumn("dist", F.lit(i))
+            .observe(obs, F.count(F.lit(1)).alias("n")))
+        if obs.get["n"] == 0:
             break
         out.append(frontier)
         settled_nodes = settled_nodes.unionByName(frontier.select("node"))
     result = out[0]
     for f in out[1:]:
         result = result.unionByName(f)
-    # r15 (verdict item 5): materialize the union once (one cheap scan
-    # of the already-cached frontiers), then release the edge cache and
-    # every per-hop frontier — the old shape left max_hops+2 relations
-    # pinned for the session per call. The returned relation is a
-    # lineage-free scan (also collapses the O(hops^2) cached-union plan
-    # the r14 ADVICE flagged).
-    result = cut_lineage(result)
-    e.unpersist()
-    for f in out:
-        f.unpersist()
     return result
 
 

@@ -30,6 +30,7 @@ from etl_online_retail_spark.functions.vectors import (
     dot,
     norm,
 )
+from etl_online_retail_spark.operators import joins
 
 
 def _plane_sign(plane: int, dim: int, a: int, b: int) -> int:
@@ -172,11 +173,14 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     one array_sort over per-centroid struct(l2, id) per query row, the
     exact-mode twin's shape — replacing a nested-loop join + a window
     whose exchange shuffled the full query vectors. The scored join
-    then BROADCASTS the probe side explicitly: the previous plan let
+    then hints the PROBE side for broadcast: the previous plan let
     size estimates pick the build side and broadcast the CORPUS (an
     OOM at warehouse scale); the corpus now never shuffles or
     broadcasts — only the per-query candidate rows move, into the
-    final ranking exchange. Probe ranking arithmetic is the identical
+    final ranking exchange. The probe side is queries x n_probe rows,
+    so the hint is size-guarded (joins.size_guarded_broadcast): past
+    the bound the join is unhinted and AQE picks the strategy.
+    Probe ranking arithmetic is the identical
     zip_with/aggregate fold over the identical centroid doubles, and
     the (distance, centroid-id) ordering matches the old window's, so
     the selected lists — and every output row — are unchanged.
@@ -221,7 +225,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
                       F.col("_p._centroid").alias("_centroid")))
 
     denom = F.col("_qn") * F.col("_cn")
-    scored = (assigned.join(F.broadcast(probes), "_centroid")
+    scored = (assigned.join(joins.size_guarded_broadcast(probes), "_centroid")
               .filter(F.col("query_id") != F.col("neighbour_id"))
               .withColumn("cos_sim",
                           F.when(denom == 0.0, F.lit(0.0))
@@ -1170,7 +1174,7 @@ def ivf_topk_int(corpus: DataFrame, queries: DataFrame, k: int = 5,
                   F.slice(F.array_sort(dists("_qv")), 1, n_probe)))
               .select("query_id", "_qv", F.col("_p")["cid"].alias("_cid")))
 
-    scored = (assigned.join(F.broadcast(probes), "_cid")
+    scored = (assigned.join(joins.size_guarded_broadcast(probes), "_cid")
               .filter(F.col("query_id") != F.col("neighbour_id"))
               .withColumn("dot_q", int_dot(F.col("_qv"), F.col("_q"))))
     w = Window.partitionBy("query_id").orderBy(F.desc("dot_q"),

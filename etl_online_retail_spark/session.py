@@ -115,6 +115,10 @@ def cut_lineage(df):
     context cleaner also deletes checkpoint files once their RDDs
     are collected; otherwise files accumulate for the application's
     lifetime. See PERFORMANCE.md "Iterative loops" for the trade.
+    Both modes compute each cut once: an eager Dataset checkpoint
+    writes its blocks or files from the one job that computes the
+    rows, so a persist before a reliable cut would only add a job
+    over the cached copy (tests/test_lineage.py counts the rows).
 
     A SparkContext has one checkpoint dir. When it already has one
     under a different path than $SPARK_GRAFT_CHECKPOINT_DIR (set

@@ -83,6 +83,17 @@ def test_bradley_terry_ordering_tracks_strength(spark):
     assert re == got
 
 
+def test_bradley_terry_returns_holding_no_cache(spark):
+    """Rounds are cut, not cached, and the matrix caches are released:
+    one call leaves the cache manager where it found it."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    rows = [("A", "B", "a"), ("B", "C", "tie"), ("C", "A", "b")]
+    before = cm.cachedData().size()
+    got = bradley_terry(_battles(spark, rows), iters=3).collect()
+    assert len(got) == 3
+    assert cm.cachedData().size() == before
+
+
 def test_wilson_interval_matches_reference_formula(spark):
     """Bounds equal the same IEEE tree computed in Python; n = 0 rows
     get NULL bounds (no battles, no information)."""

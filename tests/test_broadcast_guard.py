@@ -90,3 +90,23 @@ def test_guard_results_identical_either_path(spark):
     a = broadcast_lookup(facts, dim, "k")
     b = broadcast_lookup(facts, dim, "k", max_bytes=0)  # guard trips
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+
+
+@pytest.mark.parametrize("search", ["ivf_topk", "ivf_topk_int"])
+def test_ivf_probe_broadcast_is_size_guarded(spark, monkeypatch, search):
+    """The IVF probe side (queries x n_probe rows, so it grows with the
+    query set) carries the broadcast hint only while its estimate fits
+    the bound; past it the join is unhinted. Same rows either way."""
+    from etl_online_retail_spark.catalog import load_table
+    from etl_online_retail_spark.operators import joins, similarity
+
+    emb = load_table(spark, "embeddings", "/root/testdata/sf0.001")
+    queries = emb.filter(F.col("vec_id") % 50 == 0)
+    run = getattr(similarity, search)
+    got = {}
+    for estimate in (0, BROADCAST_MAX_BYTES + 1):
+        monkeypatch.setattr(joins, "_plan_size_bytes", lambda df: estimate)
+        df = run(emb, queries, k=3, n_clusters=4, n_probe=2)
+        got[estimate] = sorted(map(tuple, df.collect()))
+        assert ("ResolvedHint" in _analyzed(df)) == (estimate == 0)
+    assert got[0] and got[0] == got[BROADCAST_MAX_BYTES + 1]

@@ -54,3 +54,53 @@ def test_reliable_mode_warns_on_a_different_context_dir(spark, tmp_path,
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         cut_lineage(df)
+
+
+@pytest.mark.parametrize("reliable", [False, True])
+def test_each_cut_evaluates_its_input_once(spark, tmp_path, monkeypatch,
+                                           reliable):
+    """An eager checkpoint writes the rows it computes: a row-counting
+    UDF before and after a shuffle runs once per input row, not once
+    for the action and again for the checkpoint write."""
+    if reliable:
+        monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ck"))
+    else:
+        monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
+    acc = spark.sparkContext.accumulator(0)
+
+    def tally(x):
+        acc.add(1)
+        return x
+
+    counted = F.udf(tally, "long")
+    df = (spark.range(100).select(counted("id").alias("id"))
+          .groupBy((F.col("id") % 10).alias("k"))
+          .agg(F.sum("id").alias("s"))
+          .select(counted("k").alias("k"), "s"))
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")  # an earlier test may own the dir
+        out = cut_lineage(df)
+    assert acc.value == 110  # 100 rows before the shuffle, 10 after
+    assert sorted(r.k for r in out.collect()) == list(range(10))
+    assert acc.value == 110  # reading the cut recomputes nothing
+
+
+def test_khop_identical_in_both_cut_modes(spark, tmp_path, monkeypatch):
+    from etl_online_retail_spark.operators.graph import khop_distances
+
+    edges = [(a, b) for a, b in [(1, 2), (2, 3), (3, 4), (2, 5), (6, 7)]]
+    edges += [(b, a) for a, b in edges]
+    g = spark.createDataFrame(edges, "src INT, dst INT")
+    seeds = spark.createDataFrame([(1,), (7,)], "node INT")
+
+    def run():
+        return sorted(map(tuple, khop_distances(g, seeds, 3).collect()))
+
+    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
+    local = run()
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ck"))
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")  # an earlier test may own the dir
+        reliable = run()
+    assert local == reliable == [(1, 0), (2, 1), (3, 2), (4, 3), (5, 2),
+                                 (6, 1), (7, 0)]

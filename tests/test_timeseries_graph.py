@@ -215,6 +215,52 @@ def test_khop_releases_caches(spark, chain_graph):
     assert n_cached() == before
 
 
+def _chain(spark, n: int):
+    edges = [(a, a + 1) for a in range(1, n)]
+    edges += [(b, a) for a, b in edges]
+    return spark.createDataFrame(edges, "src INT, dst INT")
+
+
+def _largest_plan_description(spark, run) -> int:
+    """Length of the largest physicalPlanDescription among the SQL
+    executions `run` adds to the status store (ids rise monotonically;
+    the store keeps the newest executions, so reading its tail is
+    enough)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def tail():
+        n = store.executionsCount()
+        xs = store.executionsList(max(0, n - 256), 256)
+        return [xs.apply(i) for i in range(xs.size())]
+
+    last = max((x.executionId() for x in tail()), default=-1)
+    run()
+    new = [x for x in tail() if x.executionId() > last]
+    assert new, "the call ran no SQL execution"
+    return max(len(x.physicalPlanDescription()) for x in new)
+
+
+def test_khop_plan_stays_flat_in_the_hop_count(spark):
+    """Cut frontiers keep every hop's plan one scan deep. A cached
+    frontier embedded the plans of all earlier frontiers, so the
+    largest plan description grew ~5x per hop (about 100x from 2 to 5
+    hops on this chain)."""
+    g = _chain(spark, 12)
+    seeds = spark.createDataFrame([(1,)], "node INT")
+    size = {h: _largest_plan_description(
+                spark, lambda h=h: khop_distances(g, seeds, h).collect())
+            for h in (2, 5)}
+    assert size[5] <= 2 * size[2], size
+
+
+def test_khop_eight_hops_on_a_chain(spark):
+    g = _chain(spark, 14)
+    seeds = spark.createDataFrame([(1,)], "node INT")
+    got = {r.node: r.dist
+           for r in khop_distances(g, seeds, max_hops=8).collect()}
+    assert got == {n: n - 1 for n in range(1, 10)}
+
+
 def test_copurchase_edges_support_threshold(spark):
     # pair (1,2) in two orders; (1,3) in one -> only (1,2) survives
     rows = [(100, 1), (100, 2), (101, 1), (101, 2), (102, 1), (102, 3)]
