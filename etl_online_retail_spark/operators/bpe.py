@@ -38,6 +38,28 @@ def word_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
             .agg(F.count(F.lit(1)).alias("freq")))
 
 
+def word_table_venue(docs: DataFrame, text_col: str,
+                     max_words: int) -> tuple[dict[str, int] | None,
+                                              DataFrame | None]:
+    """Pick the training venue of a word-table trainer from the exact
+    vocabulary size — the same trade as a broadcast threshold, decided
+    on an observed count rather than an estimate.
+
+    The corpus-sized aggregation (word frequencies) runs distributed and
+    is cached, so the count and whichever venue follows read it once.
+    Up to `max_words` words: returns ({word: freq}, None), collected and
+    released — a loop of distributed rounds over a vocabulary this small
+    is pure scheduling and Python-worker start-up. Past it: returns
+    (None, the cached (word, freq) relation), which the caller trains on
+    distributed and unpersists."""
+    wf = word_frequencies(docs, text_col).cache()
+    if wf.count() <= max_words:
+        freqs = {r.word: int(r.freq) for r in wf.collect()}
+        wf.unpersist()
+        return freqs, None
+    return None, wf
+
+
 def _adjacent_pairs(syms_col):
     """Adjacent symbol pairs of an array: zip(arr[:-1], arr[1:])."""
     n = F.size(syms_col)
@@ -115,11 +137,12 @@ def bpe_train(docs: DataFrame, n_merges: int = 50,
     merge list [(left, right), ...].
 
     The corpus-sized aggregation (word frequencies) always runs
-    distributed. The merge loop then picks its venue by vocab size — the
-    same trade as a broadcast join threshold: a vocabulary under
-    `driver_threshold` rows collects once and loops in memory (a 20-round
-    distributed loop on a tiny vocab is pure scheduler overhead), a larger
-    one runs distributed rounds: pair count = explode + hash aggregation,
+    distributed. The merge loop then picks its venue by the counted vocab
+    size (word_table_venue) — the same trade as a broadcast join
+    threshold: a vocabulary of at most `driver_threshold` words collects
+    once and loops in memory (a 20-round distributed loop on a tiny
+    vocab is pure scheduler overhead), a larger one runs distributed
+    rounds: pair count = explode + hash aggregation,
     batch selection on the driver (count desc, pair asc — deterministic;
     see _select_merge_batch for the exactness argument), merge application
     via an Arrow-batched pandas UDF, lineage cut per round with eager
@@ -128,15 +151,8 @@ def bpe_train(docs: DataFrame, n_merges: int = 50,
     tests/test_bpe.py). Pass `stats` to receive {"rounds": N} — the 10x
     smoke asserts batching actually cuts sweep count.
     """
-    # cache + count materializes the corpus aggregation ONCE: the venue
-    # probe (count) and whichever venue runs (collect / the syms
-    # checkpoint) then read the cached relation instead of re-running
-    # the corpus explode+agg — previously two full passes (r14)
-    wf = word_frequencies(docs, text_col).cache()
-    n_vocab = wf.count()
-    if n_vocab <= driver_threshold:
-        freqs = {r.word: r.freq for r in wf.collect()}
-        wf.unpersist()
+    freqs, wf = word_table_venue(docs, text_col, driver_threshold)
+    if freqs is not None:
         if stats is not None:
             stats["rounds"] = 0
         return _train_in_memory(freqs, n_merges)

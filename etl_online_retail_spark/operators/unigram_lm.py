@@ -22,6 +22,16 @@ are pre-summed per Arrow batch before they ever hit the shuffle). Driver
 state per round is the piece table (bounded by n_seed), never the corpus
 — the bounded-collect discipline of the repo's other iterative jobs.
 
+Venue rule (bpe.word_table_venue, shared with BPE): the word table is
+counted once it is aggregated, and a vocabulary of at most
+UNIGRAM_DRIVER_VOCAB_THRESHOLD words is collected and trained in memory
+by unigram_train_sequential; only a larger one runs the distributed EM.
+Every distributed E-step is a mapInPandas round trip whose Python
+worker starts a few hundred ms after the job is submitted, so on a
+small vocabulary the rounds cost scheduling and worker start-up, not
+Viterbi work. The bound comes from the measured crossover of the two
+venues (PERFORMANCE.md "Iterative loops"), not from BPE's.
+
 Determinism (the whole contract): Viterbi breaks score ties by fewer
 pieces then lexicographic piece sequence; E-step counts are integers
 (count × word frequency), so their distributed sum is order-independent;
@@ -42,13 +52,22 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_online_retail_spark.operators.bpe import word_frequencies
+from etl_online_retail_spark.operators.bpe import word_table_venue
 
 UNIGRAM_MAX_PIECE_LEN = 8
 UNIGRAM_N_SEED = 1024
 UNIGRAM_VOCAB_SIZE = 256
 UNIGRAM_SHRINK = 0.75
 UNIGRAM_EM_ITERS = 2
+# Largest vocabulary (distinct words) trained in memory on the driver.
+# The distributed EM pays a fixed price per round (job scheduling and
+# the Python worker's start), about 3.5 s over a whole 64-piece train
+# even on 1k words; in-memory time grows with the words and reaches
+# that price near 16k words. Below the bound the in-memory venue is
+# faster however many executors the EM could use; on 4 local cores the
+# two venues tie near 64k words (table in PERFORMANCE.md "Iterative
+# loops"). BPE's 65,536 is a different loop's crossover.
+UNIGRAM_DRIVER_VOCAB_THRESHOLD = 16_384
 
 # Bound on the DRIVER-merged E-step partial relation (r15, VERDICT item
 # 2): the per-task partials are n_tasks x |inventory| rows. At the
@@ -249,13 +268,19 @@ def unigram_train(docs: DataFrame, vocab_size: int = UNIGRAM_VOCAB_SIZE,
                   shrink: float = UNIGRAM_SHRINK,
                   em_iters: int = UNIGRAM_EM_ITERS,
                   text_col: str = "text") -> list[tuple[str, float]]:
-    """Train the unigram piece inventory distributed; returns
-    [(piece, logp)] sorted by (logp DESC, piece ASC) — vocab_size
-    multi-character pieces plus the character floor."""
-    words = word_frequencies(docs, text_col).cache()
+    """Train the unigram piece inventory; returns [(piece, logp)]
+    sorted by (logp DESC, piece ASC) — vocab_size multi-character pieces
+    plus the character floor. The venue follows the counted vocabulary
+    size (module docstring); both venues return the same list, bit for
+    bit."""
+    freqs, words = word_table_venue(docs, text_col,
+                                    UNIGRAM_DRIVER_VOCAB_THRESHOLD)
+    if freqs is not None:
+        return unigram_train_sequential(freqs, vocab_size, n_seed,
+                                        max_piece_len, shrink, em_iters)
     seed_counts, chars = seed_candidates(words, n_seed, max_piece_len)
-    # partition count of the (now materialized) cached word relation,
-    # read once: the E-step's driver-merge bound needs it every round
+    # partition count of the materialized cached word relation, read
+    # once: the E-step's driver-merge bound needs it every round
     n_tasks = words.rdd.getNumPartitions()
     logp = _train_loop(
         lambda lp: _estep_distributed(words, lp, max_piece_len, n_tasks),
@@ -271,9 +296,10 @@ def unigram_train_sequential(word_freqs: dict[str, int],
                              shrink: float = UNIGRAM_SHRINK,
                              em_iters: int = UNIGRAM_EM_ITERS,
                              ) -> list[tuple[str, float]]:
-    """Single-process reference: identical schedule, identical helpers,
-    plain-Python seeding and E-step — the equality target the
-    distributed trainer is tested against (bpe.py's venue pattern)."""
+    """Single-process trainer: identical schedule, identical helpers,
+    plain-Python seeding and E-step. It is unigram_train's small-vocabulary
+    venue and the equality target the distributed EM is tested
+    against."""
     counts: Counter = Counter()
     chars: set[str] = set()
     for word, freq in word_freqs.items():

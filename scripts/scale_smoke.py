@@ -1103,12 +1103,17 @@ def main() -> None:
     def unigram():
         # full distributed train: substring seeding + Viterbi EM rounds
         # (per-batch piece partials shuffle); the mutated corpus keeps
-        # per-copy vocab diversity growing with the factor
-        from etl_online_retail_spark.operators.unigram_lm import (
-            unigram_train,
-        )
+        # per-copy vocab diversity growing with the factor. The bound is
+        # set to 0 for the call, so the distributed EM runs at every
+        # factor instead of the in-memory venue below the bound.
+        from etl_online_retail_spark.operators import unigram_lm
 
-        unigram_train(docs_mut, vocab_size=64, n_seed=2000)
+        bound = unigram_lm.UNIGRAM_DRIVER_VOCAB_THRESHOLD
+        unigram_lm.UNIGRAM_DRIVER_VOCAB_THRESHOLD = 0
+        try:
+            unigram_lm.unigram_train(docs_mut, vocab_size=64, n_seed=2000)
+        finally:
+            unigram_lm.UNIGRAM_DRIVER_VOCAB_THRESHOLD = bound
 
     def demux():
         # container demux is map-only over Arrow batches; must scale

@@ -80,6 +80,26 @@ def test_small_dim_estimate_keeps_the_hint(spark):
     assert "ResolvedHint" in _analyzed(size_guarded_broadcast(small))
 
 
+def test_exact_row_count_decides_on_both_sides_of_the_bound(spark):
+    """Given an exact row count, the guard sizes the relation as rows x
+    row width and ignores the static estimate: a cut relation's estimate
+    is its origin plan's, here 10M rows for a 10-row cut."""
+    from etl_online_retail_spark.operators.joins import _row_width_bytes
+    from etl_online_retail_spark.session import cut_lineage
+
+    cut = cut_lineage(spark.range(10_000_000)
+                      .select(F.col("id").alias("k"))
+                      .filter(F.col("k") < 10))
+    assert _plan_size_bytes(cut) > BROADCAST_MAX_BYTES
+    assert "ResolvedHint" not in _analyzed(size_guarded_broadcast(cut))
+    assert "ResolvedHint" in _analyzed(size_guarded_broadcast(cut, rows=10))
+    fits = BROADCAST_MAX_BYTES // _row_width_bytes(cut)
+    assert "ResolvedHint" in _analyzed(size_guarded_broadcast(cut,
+                                                              rows=fits))
+    assert "ResolvedHint" not in _analyzed(
+        size_guarded_broadcast(cut, rows=fits + 1))
+
+
 def test_guard_results_identical_either_path(spark):
     """Hinted and unhinted joins return the same rows (the guard is a
     pure planning concern)."""

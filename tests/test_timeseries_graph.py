@@ -221,11 +221,10 @@ def _chain(spark, n: int):
     return spark.createDataFrame(edges, "src INT, dst INT")
 
 
-def _largest_plan_description(spark, run) -> int:
-    """Length of the largest physicalPlanDescription among the SQL
-    executions `run` adds to the status store (ids rise monotonically;
-    the store keeps the newest executions, so reading its tail is
-    enough)."""
+def _new_plan_descriptions(spark, run) -> list[str]:
+    """The physicalPlanDescription of every SQL execution `run` adds to
+    the status store (ids rise monotonically; the store keeps the newest
+    executions, so reading its tail is enough)."""
     store = spark._jsparkSession.sharedState().statusStore()
 
     def tail():
@@ -235,9 +234,16 @@ def _largest_plan_description(spark, run) -> int:
 
     last = max((x.executionId() for x in tail()), default=-1)
     run()
-    new = [x for x in tail() if x.executionId() > last]
+    new = [x.physicalPlanDescription() for x in tail()
+           if x.executionId() > last]
     assert new, "the call ran no SQL execution"
-    return max(len(x.physicalPlanDescription()) for x in new)
+    return new
+
+
+def _largest_plan_description(spark, run) -> int:
+    """Length of the largest plan description among the SQL executions
+    `run` adds to the status store."""
+    return max(map(len, _new_plan_descriptions(spark, run)))
 
 
 def test_khop_plan_stays_flat_in_the_hop_count(spark):
@@ -251,6 +257,19 @@ def test_khop_plan_stays_flat_in_the_hop_count(spark):
                 spark, lambda h=h: khop_distances(g, seeds, h).collect())
             for h in (2, 5)}
     assert size[5] <= 2 * size[2], size
+
+
+def test_khop_plans_no_sort_merge_join(spark):
+    """Each hop broadcasts its frontier and settled set by their
+    observed row counts. Planned from the cuts' compounding size
+    estimates instead, every hop after the first was a SortMergeJoin
+    that shuffled the whole edge relation (20 in this call)."""
+    g = _chain(spark, 12)
+    seeds = spark.createDataFrame([(1,)], "node INT")
+    plans = _new_plan_descriptions(
+        spark, lambda: khop_distances(g, seeds, 5).collect())
+    assert not [p for p in plans if "SortMergeJoin" in p]
+    assert any("BroadcastHashJoin" in p for p in plans)
 
 
 def test_khop_eight_hops_on_a_chain(spark):

@@ -1,13 +1,16 @@
 """Unigram-LM tokenizer training: distributed == sequential reference,
-partition invariance, Viterbi semantics, coverage and compression."""
+the venue rule, partition invariance, Viterbi semantics, coverage and
+compression."""
 
 from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_online_retail_spark.catalog import load_table
+from etl_online_retail_spark.operators import unigram_lm
 from etl_online_retail_spark.operators.bpe import word_frequencies
 from etl_online_retail_spark.operators.unigram_lm import (
     _viterbi,
@@ -19,6 +22,13 @@ from etl_online_retail_spark.operators.unigram_lm import (
 SF = "/root/testdata/sf0.001"
 
 VOCAB, SEED = 48, 192
+
+
+@pytest.fixture
+def distributed(monkeypatch):
+    """Force the distributed EM: a bound of 0 words sends every
+    vocabulary past the in-memory venue."""
+    monkeypatch.setattr(unigram_lm, "UNIGRAM_DRIVER_VOCAB_THRESHOLD", 0)
 
 
 def test_viterbi_picks_max_prob_segmentation():
@@ -48,7 +58,7 @@ def test_viterbi_tie_breaks_deterministic():
     assert _viterbi("aaaa", logp2, 8) == ["aa", "aa"]
 
 
-def test_distributed_equals_sequential_reference(spark):
+def test_distributed_equals_sequential_reference(spark, distributed):
     docs = load_table(spark, "documents", SF)
     dist = unigram_train(docs, vocab_size=VOCAB, n_seed=SEED)
     wf = {r["word"]: int(r["freq"])
@@ -57,7 +67,7 @@ def test_distributed_equals_sequential_reference(spark):
     assert dist == seq  # pieces AND log-probs, bit-for-bit
 
 
-def test_partition_invariance(spark):
+def test_partition_invariance(spark, distributed):
     docs = load_table(spark, "documents", SF)
     a = unigram_train(docs, vocab_size=VOCAB, n_seed=SEED)
     b = unigram_train(docs.repartition(7), vocab_size=VOCAB, n_seed=SEED)
@@ -85,6 +95,27 @@ def test_estep_inplan_reduce_equals_driver_merge(spark, monkeypatch):
         words.unpersist()
     assert driver_merged == in_plan
     assert sum(driver_merged.values()) > 0
+
+
+def test_small_vocabulary_trains_in_memory(spark, monkeypatch):
+    """At sf0.001 the word table is far under the bound: a default call
+    never runs the distributed E-step, and it returns what the forced
+    distributed EM returns, pieces and log-probs bit for bit."""
+    docs = load_table(spark, "documents", SF)
+    distributed = []
+    real_estep = unigram_lm._estep_distributed
+
+    def spy(*args, **kwargs):
+        distributed.append(1)
+        return real_estep(*args, **kwargs)
+
+    monkeypatch.setattr(unigram_lm, "_estep_distributed", spy)
+    in_memory = unigram_train(docs, vocab_size=VOCAB, n_seed=SEED)
+    assert distributed == []
+    monkeypatch.setattr(unigram_lm, "UNIGRAM_DRIVER_VOCAB_THRESHOLD", 0)
+    forced = unigram_train(docs, vocab_size=VOCAB, n_seed=SEED)
+    assert distributed, "the forced call did not run the distributed EM"
+    assert in_memory == forced
 
 
 def test_vocab_shape_and_coverage(spark):
