@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_online_retail_spark.operators import joins
-from etl_online_retail_spark.session import cut_lineage
+from etl_online_retail_spark.session import cut_lineage, cut_observed
 
 OUTCOME_A = "a"
 OUTCOME_B = "b"
@@ -237,41 +237,45 @@ def bradley_terry_from_matrix(matrix: DataFrame,
     Overflow guard (r13 advice): a model whose TOTAL half-points
     exceed (2^63-1) / S^2 would silently wrap the int64 MM numerator/
     denominator; the per-model bound is asserted in-plan (raise_error)
-    when the w relation materializes, before any iteration."""
+    when the w relation is cut, before any iteration.
+
+    State is cut, never cached. Each round broadcasts its per-model
+    relations by the model count observed on w's cut: a cut's size
+    estimate compounds (1.55e33 bytes for 7 rows by round 2)."""
     max_n2_per_model = (2 ** 63 - 1) // _S2
-    d = directed_from_matrix(matrix).cache()
-    w = (d.groupBy("model")
-         .agg(F.sum("w2").alias("_w2"), F.sum("n2").alias("_n2"))
-         .select("model",
-                 F.when(F.col("_n2") <= max_n2_per_model, F.col("_w2"))
-                  .otherwise(F.raise_error(F.concat(
-                      F.lit("bradley_terry: model "), F.col("model"),
-                      F.lit(f" holds more than {max_n2_per_model} "
-                            "half-points — int64 fixed-point would "
-                            "overflow; shrink BT_FP_SCALE"))))
-                  .alias("w2"))
-         .cache())
+    d = cut_lineage(directed_from_matrix(matrix))
+    w, m = cut_observed(
+        d.groupBy("model")
+        .agg(F.sum("w2").alias("_w2"), F.sum("n2").alias("_n2"))
+        .select("model",
+                F.when(F.col("_n2") <= max_n2_per_model, F.col("_w2"))
+                 .otherwise(F.raise_error(F.concat(
+                     F.lit("bradley_terry: model "), F.col("model"),
+                     F.lit(f" holds more than {max_n2_per_model} "
+                           "half-points — int64 fixed-point would "
+                           "overflow; shrink BT_FP_SCALE"))))
+                 .alias("w2")),
+        F.count(F.lit(1)).alias("n"))
+    n_models = m["n"]
     scores = w.select("model",
                       F.lit(BT_FP_SCALE).cast("long").alias("bt_fp"))
     for _ in range(iters):
-        sc = joins.size_guarded_broadcast(scores)
+        sc = joins.size_guarded_broadcast(scores, rows=n_models)
         t = (d.join(sc.select(F.col("model"), F.col("bt_fp").alias("_pi")),
                     "model")
              .join(sc.select(F.col("model").alias("opp"),
                              F.col("bt_fp").alias("_pj")), "opp"))
         term = F.expr(f"n2 * {_S2}L div (_pi + _pj)")
         denom = t.groupBy("model").agg(F.sum(term).alias("_d"))
-        # each round is cut, not cached: a cached round embeds the
-        # previous round's plan, and the returned round would pin a
-        # cache entry for the session
+        # a cached round would embed the previous round's plan and pin
+        # a cache entry for the session
         scores = cut_lineage(
-            w.join(denom, "model")
+            w.join(joins.size_guarded_broadcast(denom, rows=n_models),
+                   "model")
             .select("model",
                     F.greatest(F.lit(1).cast("long"),
                                F.expr(f"w2 * {_S2}L div _d"))
                     .alias("bt_fp")))
-    d.unpersist()
-    w.unpersist()
     return scores.withColumn(
         "bt_score", F.col("bt_fp").cast("double") / F.lit(BT_FP_SCALE))
 

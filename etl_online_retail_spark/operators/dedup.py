@@ -31,7 +31,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_online_retail_spark.session import cut_lineage
+from etl_online_retail_spark.session import cut_lineage, cut_observed
 
 from etl_online_retail_spark.functions.hashing import bit, minhash_signature
 from etl_online_retail_spark.functions.text import (
@@ -279,8 +279,6 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
     At much larger graphs this becomes the standard large-star/small-star
     formulation - same join shape, fewer rounds.
     """
-    from pyspark.sql import Observation
-
     edges = (pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
              .unionByName(pairs.select(F.col("id_b").alias("src"),
                                        F.col("id_a").alias("dst"))))
@@ -293,23 +291,19 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
         neighbour_min = (edges.join(labels, edges.dst == labels.node)
                          .groupBy("src")
                          .agg(F.min("label").alias("nmin")))
-        # the convergence probe rides the materializing action as an
-        # observed metric (r14): the old shape paid a SECOND job per
-        # round (filter + limit-1 count) just to ask "did any label
-        # move?" — the eager checkpoint already computes every row
-        obs = Observation()
-        updated = (labels.join(neighbour_min, labels.node == neighbour_min.src,
-                               "left")
-                   .select(F.col("node"),
-                           F.least(F.col("label"),
-                                   F.coalesce(F.col("nmin"), F.col("label")))
-                            .alias("label"),
-                           F.col("label").alias("_old"))
-                   .observe(obs, F.sum(
-                       F.when(F.col("label") != F.col("_old"), 1)
-                        .otherwise(0)).alias("changed"))
-                   .transform(cut_lineage))
-        changed = obs.get["changed"] or 0
+        # "did any label move?" is observed on the round's cut: no
+        # second job per round
+        updated, m = cut_observed(
+            labels.join(neighbour_min, labels.node == neighbour_min.src,
+                        "left")
+            .select(F.col("node"),
+                    F.least(F.col("label"),
+                            F.coalesce(F.col("nmin"), F.col("label")))
+                     .alias("label"),
+                    F.col("label").alias("_old")),
+            F.sum(F.when(F.col("label") != F.col("_old"), 1)
+                  .otherwise(0)).alias("changed"))
+        changed = m["changed"] or 0
         labels = updated.drop("_old")
         if changed == 0:
             break
@@ -344,8 +338,6 @@ def duplicate_clusters_star(pairs: DataFrame,
     Rounds are driver-coordinated but the per-round work is fully
     distributed (the same trade Spark ML's KMeans makes).
     """
-    from pyspark.sql import Observation
-
     nodes = (pairs.select(F.col("id_a").alias("node"))
              .unionByName(pairs.select(F.col("id_b").alias("node")))
              .distinct()
@@ -374,19 +366,16 @@ def duplicate_clusters_star(pairs: DataFrame,
         mins = (oriented.groupBy("src")
                 .agg(F.least(F.min("dst"), F.first("src")).alias("m")))
         joined = oriented.join(mins, "src")
-        # the edge-set checksum rides the materializing checkpoint as an
-        # observed metric (r14) — previously a second agg job per round.
-        # bit_xor never overflows (ANSI-safe), and is multiset-insensitive
-        # only to duplicate rows — which distinct() already removed.
-        obs = Observation()
-        edges = (joined.select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-                 .unionByName(joined.select("src", F.col("m").alias("dst")))
-                 .filter(F.col("src") != F.col("dst"))
-                 .distinct()
-                 .observe(obs, F.count(F.lit(1)).alias("n"),
-                          F.expr("bit_xor(xxhash64(src, dst))").alias("h"))
-                 .transform(cut_lineage))
-        m = obs.get
+        # the edge-set checksum is observed on the round's cut. bit_xor
+        # never overflows (ANSI-safe), and is multiset-insensitive only
+        # to duplicate rows — which distinct() already removed.
+        edges, m = cut_observed(
+            joined.select(F.col("dst").alias("src"), F.col("m").alias("dst"))
+            .unionByName(joined.select("src", F.col("m").alias("dst")))
+            .filter(F.col("src") != F.col("dst"))
+            .distinct(),
+            F.count(F.lit(1)).alias("n"),
+            F.expr("bit_xor(xxhash64(src, dst))").alias("h"))
         cur = (m["n"], m["h"])
         if cur == prev:
             break

@@ -61,18 +61,11 @@ Scale notes (100 TB lens):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_online_retail_spark.operators.joins import size_guarded_broadcast
-from etl_online_retail_spark.session import cut_lineage
-
-
-def _cut_counted(df: DataFrame) -> tuple[DataFrame, int]:
-    """cut_lineage(df) and its exact row count, observed on the cut."""
-    obs = Observation()
-    cut = cut_lineage(df.observe(obs, F.count(F.lit(1)).alias("n")))
-    return cut, obs.get["n"]
+from etl_online_retail_spark.session import cut_lineage, cut_observed
 
 
 def khop_distances(edges: DataFrame, seeds: DataFrame,
@@ -91,8 +84,10 @@ def khop_distances(edges: DataFrame, seeds: DataFrame,
     # agg) instead of one per hop. At 100 TB this is a reliable cut
     # ($SPARK_GRAFT_CHECKPOINT_DIR) or a staged edge table.
     e = cut_lineage(edges.select(F.col("src"), F.col("dst")))
-    frontier, n_frontier = _cut_counted(
-        seeds.select(F.col("node")).distinct().withColumn("dist", F.lit(0)))
+    frontier, m = cut_observed(
+        seeds.select(F.col("node")).distinct().withColumn("dist", F.lit(0)),
+        F.count(F.lit(1)).alias("n"))
+    n_frontier = m["n"]
     out = [frontier]
     settled_nodes = frontier.select("node")
     n_settled = n_frontier
@@ -101,11 +96,13 @@ def khop_distances(edges: DataFrame, seeds: DataFrame,
         reached = (front.join(e, front["node"] == e["src"])
                    .select(F.col("dst").alias("node"))
                    .distinct())
-        frontier, n_frontier = _cut_counted(
+        frontier, m = cut_observed(
             reached.join(size_guarded_broadcast(settled_nodes,
                                                 rows=n_settled),
                          "node", "left_anti")
-            .withColumn("dist", F.lit(i)))
+            .withColumn("dist", F.lit(i)),
+            F.count(F.lit(1)).alias("n"))
+        n_frontier = m["n"]
         if n_frontier == 0:
             break
         out.append(frontier)
@@ -298,9 +295,88 @@ def _damping_pct(damping: float) -> int:
     return d_num
 
 
+def _rank(edges: DataFrame, seeds: DataFrame | None, max_iter: int,
+          damping: float, exact: bool) -> DataFrame:
+    """The power iteration behind pagerank and personalized_pagerank:
+    teleport and dangling mass return uniformly to the seed set, and
+    seeds=None seeds every node (global PageRank, n_seeds = n).
+
+    The edge relation and the static node relation (out-degree and seed
+    flag folded in) are cut once, and n / n_seeds are observed on the
+    node cut, so a round joins only rank x edges and node x incoming.
+    Both joins broadcast their rank side by the count n (exact for the
+    rank vector, an upper bound for incoming): a cut keeps the
+    compounding size estimate of the plan it came from, so planned from
+    estimates every round was a SortMergeJoin that shuffled the edges.
+    Dangling mass stays in-plan as a 1-row broadcast crossJoin, and each
+    round's one action is its cut, which next round's two consumers
+    scan. Nothing is cached."""
+    d_num = _damping_pct(damping) if exact else None
+    e = cut_lineage(edges.select("src", "dst").distinct())
+    nodes = (e.select(F.col("src").alias("node"))
+             .unionByName(e.select(F.col("dst").alias("node")))
+             .distinct())
+    if seeds is None:
+        nodes = nodes.withColumn("_s", F.lit(1))
+    else:
+        nodes = nodes.join(seeds.select(F.col("node")).distinct()
+                           .withColumn("_s", F.lit(1)), "node", "left")
+    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
+    nd, m = cut_observed(
+        nodes.join(outdeg, nodes["node"] == outdeg["src"], "left")
+             .select("node", "_deg", "_s"),
+        F.count(F.lit(1)).alias("n"), F.count("_s").alias("n_seeds"))
+    n, n_seeds = m["n"], m["n_seeds"]
+    if n == 0:
+        # an empty edge relation is one min_orders threshold away
+        raise ValueError(
+            "pagerank: the edge relation is empty (no nodes); "
+            "check the edge-construction thresholds")
+    if n_seeds == 0:
+        raise ValueError("personalized_pagerank: no seed is in the graph")
+
+    is_seed = F.col("_s").isNotNull()
+    if exact:
+        init = F.lit(PR_FP_SCALE // n_seeds).cast("long")
+        zero = F.lit(0).cast("long")
+    else:
+        init, zero = F.lit(1.0 / n_seeds), F.lit(0.0)
+    ranks = nd.select(
+        "node", "_deg", "_s",
+        F.when(is_seed, init).otherwise(zero).alias("rank"))
+    for _ in range(max_iter):
+        dang = (ranks.filter(F.col("_deg").isNull())
+                .agg(F.coalesce(F.sum("rank"), zero).alias("_dang")))
+        per_edge = (F.expr("rank div _deg") if exact
+                    else F.col("rank") / F.col("_deg"))
+        src = size_guarded_broadcast(
+            ranks.filter(F.col("_deg").isNotNull()), rows=n)
+        spread = (src.join(e, src["node"] == e["src"])
+                  .select(F.col("dst").alias("node"), per_edge.alias("_c")))
+        incoming = spread.groupBy("node").agg(F.sum("_c").alias("_in"))
+        if exact:
+            # same integer arithmetic as the unrolled oracles: all terms
+            # non-negative, so Spark's truncating div == floor //
+            teleport = F.expr(
+                f"(({100 - d_num} * {PR_FP_SCALE}L) + {d_num} * _dang) "
+                f"div {100 * n_seeds}")
+            walk = F.expr(f"({d_num} * coalesce(_in, 0L)) div 100")
+        else:
+            teleport = ((F.lit(1.0 - damping)
+                         + F.lit(damping) * F.col("_dang"))
+                        * F.lit(1.0 / n_seeds))
+            walk = F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
+        ranks = cut_lineage(
+            nd.join(size_guarded_broadcast(incoming, rows=n), "node", "left")
+              .crossJoin(F.broadcast(dang))
+              .select("node", "_deg", "_s",
+                      (F.when(is_seed, teleport).otherwise(zero) + walk)
+                      .alias("rank")))
+    return ranks.select("node", "rank")
+
+
 def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
                           max_iter: int = 10, damping: float = 0.85,
-                          checkpoint_every: int = 3,
                           exact: bool = False) -> DataFrame:
     """Personalized PageRank: the random walk teleports back to the SEED
     set instead of everywhere — rank becomes "importance relative to
@@ -313,177 +389,31 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
 
     with s uniform over `seeds` (a (node) relation) and 0 elsewhere —
     dangling mass also returns to the seeds, keeping total mass 1.
-    Same iterative discipline as pagerank (static node/degree/seed
-    relation built once, dangling mass folded in-plan, one eager
-    checkpoint per round — see pagerank's r14 notes). Default float
-    mode is rows-only for the driver; exact=True runs the whole
-    iteration in FIXED-POINT int64 (rank * 10^12, truncating integer
-    divides — see PR_FP_SCALE), so a fixed iteration count
+    ValueError if no seed is in the graph.
+
+    Float ranks are order-of-summation sensitive at ulp level, so the
+    default mode is rows-only for the driver gate; exact=True runs the
+    whole iteration in FIXED-POINT int64 (rank * 10^12, truncating
+    integer divides — see PR_FP_SCALE), so a fixed iteration count
     hash-verifies against an unrolled SQL oracle; the returned rank is
     then fp/10^12 as DOUBLE. Invariants (mass conservation, seed
-    locality, teleport floor on seeds) pytest-asserted on the float
-    mode. checkpoint_every is accepted for API compatibility; every
-    round is cut (each round's output feeds two consumers next round).
+    locality, teleport floor on seeds) are pytest-asserted on the float
+    mode.
     """
-    e = edges.select("src", "dst").distinct().cache()
-    nodes = (e.select(F.col("src").alias("node"))
-             .unionByName(e.select(F.col("dst").alias("node")))
-             .distinct())
-    s = (seeds.select(F.col("node")).distinct()
-         .join(nodes, "node", "left_semi")
-         .withColumn("_s", F.lit(1)))
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
-    # static per-node relation: out-degree AND seed flag folded in ONCE —
-    # the old shape re-joined outdeg against the rank vector every round
-    nd = (nodes.join(outdeg, nodes["node"] == outdeg["src"], "left")
-          .join(s, "node", "left")
-          .select("node", "_deg", "_s"))
-    nd = cut_lineage(nd)
-    n_seeds = nd.agg(F.count("_s")).collect()[0][0]
-    if n_seeds == 0:
-        raise ValueError("personalized_pagerank: no seed is in the graph")
-    seed_share = 1.0 / n_seeds
-
-    is_seed = F.col("_s").isNotNull()
-    if exact:
-        d_num = _damping_pct(damping)
-        init = F.lit(PR_FP_SCALE // n_seeds).cast("long")
-        zero = F.lit(0).cast("long")
-    else:
-        init, zero = F.lit(seed_share), F.lit(0.0)
-    # ranks carries _deg and _s so no per-round dimension join is needed
-    ranks = nd.select(
-        "node", "_deg", "_s",
-        F.when(is_seed, init).otherwise(zero).alias("rank"))
-    for _ in range(max_iter):
-        # dangling mass as a LAZY 1-row broadcast (crossJoin), not a
-        # driver collect: the old shape paid one blocking job per round
-        # just to turn the sum into a literal (r14, guide §5 "the driver
-        # should do almost no data work")
-        dang = (ranks.filter(F.col("_deg").isNull())
-                .agg(F.coalesce(F.sum("rank"), zero).alias("_dang")))
-        per_edge = (F.expr("rank div _deg") if exact
-                    else F.col("rank") / F.col("_deg"))
-        spread = (ranks.filter(F.col("_deg").isNotNull())
-                  .join(e, ranks["node"] == e["src"])
-                  .select(F.col("dst").alias("node"), per_edge.alias("_c")))
-        incoming = spread.groupBy("node").agg(F.sum("_c").alias("_in"))
-        if exact:
-            # same integer arithmetic as the unrolled oracle: all terms
-            # non-negative, so Spark's truncating div == floor //
-            teleport_fp = F.expr(
-                f"(({100 - d_num} * {PR_FP_SCALE}L) + {d_num} * _dang) "
-                f"div {100 * n_seeds}")
-            new_rank = (F.when(is_seed, teleport_fp).otherwise(zero)
-                        + F.expr(f"({d_num} * coalesce(_in, 0L)) div 100"))
-        else:
-            teleport = ((F.lit(1.0 - damping)
-                         + F.lit(damping) * F.col("_dang"))
-                        * F.lit(seed_share))
-            new_rank = (F.when(is_seed, teleport).otherwise(zero)
-                        + F.lit(damping) * F.coalesce(F.col("_in"),
-                                                      F.lit(0.0)))
-        # one eager checkpoint per round = the round's ONLY action; the
-        # checkpointed output is scanned (cheaply) by both of next
-        # round's consumers, so no per-round cache to leak
-        ranks = cut_lineage(
-            nd.join(incoming, "node", "left")
-              .crossJoin(F.broadcast(dang))
-              .select("node", "_deg", "_s", new_rank.alias("rank")))
-    e.unpersist()
-    return ranks.select("node", "rank")
+    return _rank(edges, seeds, max_iter, damping, exact)
 
 
 def pagerank(edges: DataFrame, max_iter: int = 10,
-             damping: float = 0.85,
-             checkpoint_every: int = 3,
-             exact: bool = False) -> DataFrame:
+             damping: float = 0.85, exact: bool = False) -> DataFrame:
     """PageRank over a (src, dst) edge relation -> (node, rank), ranks
     summing to 1. Standard power iteration with dangling-mass
     redistribution:
 
         r'(v) = (1-d)/N + d * (sum_{u->v} r(u)/outdeg(u) + dangling/N)
 
-    The iterative-numeric sibling of khop_distances. r14 round shape
-    (guide §2.4/§5 — the old loop paid a blocking dangling-mass collect
-    per round plus a rank-vector/out-degree join per round):
-
-      * the node relation with out-degree folded in is built ONCE
-        (eager localCheckpoint) and the rank vector CARRIES _deg, so a
-        round joins only rank×edges (on src) and node×incoming (on
-        node) — one dimension join per round removed;
-      * dangling mass stays IN-PLAN as a lazy 1-row aggregate attached
-        with a broadcast crossJoin (the copurchase_pmi N pattern) — no
-        driver round-trip, no per-round contrib cache to leak;
-      * each round ends in ONE eager localCheckpoint (its only action),
-        so next round's two consumers (dangling agg + spread join) scan
-        a materialized input instead of replaying lineage — the
-        standard Spark iterative-algorithm discipline, GraphX does the
-        same internally. checkpoint_every is accepted for API
-        compatibility; every round is cut.
-
-    Float ranks are order-of-summation sensitive at ulp level, so the
-    default mode is rows-only for the driver gate; exact=True runs the
-    whole iteration in FIXED-POINT int64 (rank * 10^12, truncating
-    integer divides — see PR_FP_SCALE): every step is integer
-    arithmetic, bit-identical on any engine/partitioning, so a fixed
-    iteration count hash-verifies against an unrolled SQL oracle.
-    Invariants (mass conservation, hub dominance, uniform-cycle
-    fixpoint) are pytest-asserted on the float mode.
+    i.e. personalized_pagerank with every node a seed, and run as that
+    loop (same exact and float modes). ValueError on an empty edge
+    relation. Invariants (mass conservation, hub dominance,
+    uniform-cycle fixpoint) are pytest-asserted on the float mode.
     """
-    e = edges.select("src", "dst").distinct().cache()
-    nodes = (e.select(F.col("src").alias("node"))
-             .unionByName(e.select(F.col("dst").alias("node")))
-             .distinct())
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
-    nd = cut_lineage(
-        nodes.join(outdeg, nodes["node"] == outdeg["src"], "left")
-             .select("node", "_deg"))
-    n = nd.count()
-    if n == 0:
-        # loud, like personalized_pagerank's no-seed guard — a bare
-        # ZeroDivisionError names nothing (r7 review); an empty edge
-        # relation is one min_orders threshold away
-        raise ValueError(
-            "pagerank: the edge relation is empty (no nodes); "
-            "check the edge-construction thresholds")
-
-    if exact:
-        d_num = _damping_pct(damping)
-        ranks = nd.withColumn(
-            "rank", F.lit(PR_FP_SCALE // n).cast("long"))
-        zero = F.lit(0).cast("long")
-    else:
-        ranks = nd.withColumn("rank", F.lit(1.0 / n))
-        zero = F.lit(0.0)
-    for _ in range(max_iter):
-        # dangling nodes (no out-edges) spread their mass uniformly;
-        # the mass rides as a lazy broadcast 1-row relation
-        dang = (ranks.filter(F.col("_deg").isNull())
-                .agg(F.coalesce(F.sum("rank"), zero).alias("_dang")))
-        per_edge = (F.expr("rank div _deg") if exact
-                    else F.col("rank") / F.col("_deg"))
-        spread = (ranks.filter(F.col("_deg").isNotNull())
-                  .join(e, ranks["node"] == e["src"])
-                  .select(F.col("dst").alias("node"), per_edge.alias("_c")))
-        incoming = spread.groupBy("node").agg(F.sum("_c").alias("_in"))
-        if exact:
-            # identical integer arithmetic to the old driver-side fold
-            # and the unrolled oracle (all terms non-negative: div == //)
-            base_fp = F.expr(
-                f"(({100 - d_num} * {PR_FP_SCALE}L) + {d_num} * _dang) "
-                f"div {100 * n}")
-            new_rank = (base_fp
-                        + F.expr(f"({d_num} * coalesce(_in, 0L)) div 100"))
-        else:
-            base = (F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * F.col("_dang") / F.lit(float(n)))
-            new_rank = (base
-                        + F.lit(damping) * F.coalesce(F.col("_in"),
-                                                      F.lit(0.0)))
-        ranks = cut_lineage(
-            nd.join(incoming, "node", "left")
-              .crossJoin(F.broadcast(dang))
-              .select("node", "_deg", new_rank.alias("rank")))
-    e.unpersist()
-    return ranks.select("node", "rank")
+    return _rank(edges, None, max_iter, damping, exact)

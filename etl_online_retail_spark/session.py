@@ -15,7 +15,7 @@ from __future__ import annotations
 import os
 import warnings
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 
 # Runtime-settable SQL confs that queries in this package rely on. They are
 # applied both at build time (get_spark) and defensively on sessions we did
@@ -98,7 +98,8 @@ def cut_lineage(df):
     """Materialize a DataFrame and truncate its lineage — the round
     boundary of every iterative operator (PageRank/PPR rounds, BFS
     frontiers, connected-components rounds, BPE merge rounds, the
-    agreement operators' reduced grains).
+    agreement operators' reduced grains). A loop that needs a count or
+    a convergence metric from its cut goes through cut_observed.
 
     Default: eager `localCheckpoint()`. Blocks live in EXECUTOR
     storage and are released with the RDD by the context cleaner —
@@ -151,6 +152,17 @@ def cut_lineage(df):
                     RuntimeWarning, stacklevel=2)
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def cut_observed(df, *metrics):
+    """(cut_lineage(df), {alias: value} of the aliased aggregate
+    `metrics` observed while the cut computes its rows): a round's
+    count or convergence probe at no extra job. Calls cut_lineage
+    through this module's global, so a wrapper on session.cut_lineage
+    sees each such cut once."""
+    obs = Observation()
+    cut = cut_lineage(df.observe(obs, *metrics))
+    return cut, obs.get
 
 
 def run_concurrently(fn, items) -> None:

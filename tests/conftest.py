@@ -51,3 +51,28 @@ def assert_no_exchange_above_cache(df) -> None:
     assert cache_hits, "plan never reads a cached (InMemoryTableScan) relation"
     assert not exchanges, \
         f"Exchange node(s) above the cached view scan: {exchanges}"
+
+
+def cached_entries(spark) -> int:
+    """Entries in the session's cache manager (a leaked .cache() shows
+    up as one more after the call than before it)."""
+    return spark._jsparkSession.sharedState().cacheManager().cachedData().size()
+
+
+def new_plan_descriptions(spark, run) -> list[str]:
+    """The physicalPlanDescription of every SQL execution `run` adds to
+    the status store (ids rise monotonically; the store keeps the newest
+    executions, so reading its tail is enough)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def tail():
+        n = store.executionsCount()
+        xs = store.executionsList(max(0, n - 256), 256)
+        return [xs.apply(i) for i in range(xs.size())]
+
+    last = max((x.executionId() for x in tail()), default=-1)
+    run()
+    new = [x.physicalPlanDescription() for x in tail()
+           if x.executionId() > last]
+    assert new, "the call ran no SQL execution"
+    return new

@@ -1,11 +1,14 @@
 """Pairwise-judgment analytics: matrix canonicalization, records,
 fixed-point Bradley-Terry (hand-computed convergence + clamp)."""
 
+import pytest
+from conftest import new_plan_descriptions
 from pyspark.sql import functions as F
 
 from etl_online_retail_spark.operators.arena import (
     BT_FP_SCALE,
     bradley_terry,
+    bradley_terry_from_matrix,
     model_records,
     pairwise_matrix,
 )
@@ -92,6 +95,29 @@ def test_bradley_terry_returns_holding_no_cache(spark):
     got = bradley_terry(_battles(spark, rows), iters=3).collect()
     assert len(got) == 3
     assert cm.cachedData().size() == before
+
+
+def test_bradley_terry_plans_no_sort_merge_join(spark):
+    """The scores and the per-model denominators are broadcast by the
+    model count observed on w's cut. Sized by the cuts' compounding
+    estimates instead, rounds 2-3 planned SortMergeJoins."""
+    rows = [("A", "B", "a"), ("B", "C", "tie"), ("C", "A", "b"),
+            ("A", "C", "a"), ("D", "A", "b"), ("B", "D", "a")]
+    plans = new_plan_descriptions(
+        spark, lambda: bradley_terry(_battles(spark, rows), iters=3)
+        .collect())
+    assert not [p for p in plans if "SortMergeJoin" in p]
+
+
+def test_bradley_terry_rejects_int64_overflow(spark):
+    """A model holding more half-points than int64 fixed point can
+    carry fails loudly in-plan, before any round."""
+    matrix = spark.createDataFrame(
+        [("A", "B", 10 ** 7, 0, 0, 10 ** 7)],
+        "m1 string, m2 string, m1_wins long, m2_wins long, ties long, "
+        "n_battles long")
+    with pytest.raises(Exception, match="int64 fixed-point would overflow"):
+        bradley_terry_from_matrix(matrix, iters=3).collect()
 
 
 def test_wilson_interval_matches_reference_formula(spark):

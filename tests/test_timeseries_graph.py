@@ -7,12 +7,19 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
+from conftest import cached_entries, new_plan_descriptions
 from pyspark.sql import functions as F
 
-from etl_online_retail_spark.operators.dedup import remove_repeated_segments
+from etl_online_retail_spark.operators.dedup import (
+    duplicate_clusters,
+    duplicate_clusters_star,
+    remove_repeated_segments,
+)
 from etl_online_retail_spark.operators.graph import (
     copurchase_edges,
     khop_distances,
+    pagerank,
+    personalized_pagerank,
 )
 from etl_online_retail_spark.operators.timeseries import (
     activity_streaks,
@@ -193,26 +200,18 @@ def test_khop_multi_seed_takes_min_distance(spark, chain_graph):
 
 
 def test_khop_releases_caches(spark, chain_graph):
-    """r15 (VERDICT item 5): khop unpersists its edge cache and every
-    per-hop frontier once the result union materializes — repeated
-    calls must not grow the cache manager (net), the same regression
-    guard shape as test_agreement_pins_no_cache_entries."""
-    cm = spark._jsparkSession.sharedState().cacheManager()
-
-    def n_cached() -> int:
-        try:
-            return cm.cachedData().size()
-        except Exception:
-            return 0 if cm.isEmpty() else 1
-
+    """khop cuts its edge relation and every frontier and caches
+    nothing, so repeated calls must not grow the cache manager — the
+    regression guard for the cached-frontier leak that once inflated
+    bench numbers (same shape as test_agreement_pins_no_cache_entries)."""
     seeds = spark.createDataFrame([(1,)], "node INT")
     khop_distances(chain_graph, seeds, max_hops=3).collect()  # warm
-    before = n_cached()
+    before = cached_entries(spark)
     for _ in range(3):
         got = {r.node: r.dist for r in
                khop_distances(chain_graph, seeds, max_hops=3).collect()}
         assert got == {1: 0, 2: 1, 3: 2, 4: 3}
-    assert n_cached() == before
+    assert cached_entries(spark) == before
 
 
 def _chain(spark, n: int):
@@ -221,29 +220,10 @@ def _chain(spark, n: int):
     return spark.createDataFrame(edges, "src INT, dst INT")
 
 
-def _new_plan_descriptions(spark, run) -> list[str]:
-    """The physicalPlanDescription of every SQL execution `run` adds to
-    the status store (ids rise monotonically; the store keeps the newest
-    executions, so reading its tail is enough)."""
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def tail():
-        n = store.executionsCount()
-        xs = store.executionsList(max(0, n - 256), 256)
-        return [xs.apply(i) for i in range(xs.size())]
-
-    last = max((x.executionId() for x in tail()), default=-1)
-    run()
-    new = [x.physicalPlanDescription() for x in tail()
-           if x.executionId() > last]
-    assert new, "the call ran no SQL execution"
-    return new
-
-
 def _largest_plan_description(spark, run) -> int:
     """Length of the largest plan description among the SQL executions
     `run` adds to the status store."""
-    return max(map(len, _new_plan_descriptions(spark, run)))
+    return max(map(len, new_plan_descriptions(spark, run)))
 
 
 def test_khop_plan_stays_flat_in_the_hop_count(spark):
@@ -266,7 +246,7 @@ def test_khop_plans_no_sort_merge_join(spark):
     that shuffled the whole edge relation (20 in this call)."""
     g = _chain(spark, 12)
     seeds = spark.createDataFrame([(1,)], "node INT")
-    plans = _new_plan_descriptions(
+    plans = new_plan_descriptions(
         spark, lambda: khop_distances(g, seeds, 5).collect())
     assert not [p for p in plans if "SortMergeJoin" in p]
     assert any("BroadcastHashJoin" in p for p in plans)
@@ -562,6 +542,60 @@ def test_pagerank_exact_rejects_unrepresentable_damping(spark):
         pagerank(df, max_iter=1, damping=0.853, exact=True)
 
 
+def test_pagerank_rejects_empty_graph(spark):
+    """An empty edge relation has no node to rank: a named ValueError,
+    not PPR's "no seed" error or a ZeroDivisionError, and no cache left
+    behind on the error path."""
+    df = spark.createDataFrame([], "src INT, dst INT")
+    before = cached_entries(spark)
+    with pytest.raises(ValueError, match="edge relation is empty"):
+        pagerank(df, max_iter=1)
+    assert cached_entries(spark) == before
+
+
+def _rank_seeded_at_1(edges, **kw):
+    seeds = edges.sparkSession.createDataFrame([(1,)], "node INT")
+    return personalized_pagerank(edges, seeds, **kw)
+
+
+@pytest.mark.parametrize("rank", [pagerank, _rank_seeded_at_1],
+                         ids=["pagerank", "personalized_pagerank"])
+def test_rank_rounds_plan_no_sort_merge_join(spark, rank):
+    """Each round broadcasts its rank vector and its incoming sums by
+    the node count observed on the node relation's cut. Planned from
+    the cuts' compounding size estimates instead, every round was a
+    SortMergeJoin that shuffled the edges. The one join left to the
+    planner builds the static node relation before round 1; the
+    rounds are the plans with the dangling-mass crossJoin."""
+    g = _chain(spark, 12)
+    plans = new_plan_descriptions(
+        spark, lambda: rank(g, max_iter=10, exact=True).collect())
+    rounds = [p for p in plans if "BroadcastNestedLoopJoin" in p]
+    assert len(rounds) == 10
+    assert not [p for p in rounds if "SortMergeJoin" in p]
+    assert len([p for p in plans if "SortMergeJoin" in p]) <= 1
+
+
+def _pairs(spark):
+    return spark.createDataFrame([(1, 2), (2, 3), (5, 6)],
+                                 "id_a INT, id_b INT")
+
+
+@pytest.mark.parametrize("run", [
+    lambda spark: pagerank(_chain(spark, 6), max_iter=3),
+    lambda spark: _rank_seeded_at_1(_chain(spark, 6), max_iter=3),
+    lambda spark: duplicate_clusters(_pairs(spark)),
+    lambda spark: duplicate_clusters_star(_pairs(spark)),
+], ids=["pagerank", "personalized_pagerank", "duplicate_clusters",
+        "duplicate_clusters_star"])
+def test_round_loops_return_holding_no_cache(spark, run):
+    """Round state is cut, never cached: one call leaves the cache
+    manager where it found it."""
+    before = cached_entries(spark)
+    assert run(spark).collect()
+    assert cached_entries(spark) == before
+
+
 def test_dedup_within_doc_keeps_first_occurrence(spark):
     from etl_online_retail_spark.operators.dedup import dedup_within_doc
 
@@ -701,5 +735,7 @@ def test_personalized_pagerank_rejects_foreign_seeds(spark):
 
     e = spark.createDataFrame([(1, 2), (2, 1)], "src BIGINT, dst BIGINT")
     seeds = spark.createDataFrame([(99,)], "node BIGINT")
+    before = cached_entries(spark)
     with pytest.raises(ValueError, match="no seed"):
         personalized_pagerank(e, seeds)
+    assert cached_entries(spark) == before  # the error path leaks none
