@@ -166,10 +166,14 @@ def copurchase_pmi(lineitem: DataFrame, min_orders: int = 2) -> DataFrame:
 
     Output: (src, dst, n_both, n_src, n_dst, lift DOUBLE, pmi DOUBLE).
     """
-    op = (lineitem.select(F.col("l_orderkey").alias("_ok"),
-                          F.col("l_partkey").alias("_pk"))
-          .distinct()
-          .cache())  # feeds supports, both pair legs, and N (rule 7)
+    # cut: the projection feeds the supports, both pair legs and N
+    # (rule 7). Uncut, those legs push different null filters into
+    # their lineitem scans, so the exchanges differ and nothing is
+    # reused: three scans. A cut, unlike a cache, is released with
+    # the plan instead of pinning storage after the call.
+    op = cut_lineage(lineitem.select(F.col("l_orderkey").alias("_ok"),
+                                     F.col("l_partkey").alias("_pk"))
+                     .distinct())
     # N rides along as a broadcast 1-row crossJoin (the relevance.py
     # corpus-stats pattern) — fully lazy, no driver-side action
     n_rel = op.agg(F.count_distinct("_ok").alias("_n"))
@@ -213,10 +217,11 @@ def copurchase_rules(lineitem: DataFrame, min_orders: int = 2,
     Output: (antecedent, consequent, n_both, n_antecedent, confidence,
     lift).
     """
-    # cache: the scored pair relation feeds BOTH direction projections
-    # (rule 7 — uncached, the pair agg + support join-backs run twice);
-    # it is support-thresholded, i.e. output-sized
-    scored = copurchase_pmi(lineitem, min_orders=min_orders).cache()
+    # the scored pair relation feeds BOTH direction projections; the
+    # two legs are the same plan over copurchase_pmi's cut, so the
+    # physical plan reuses each exchange (ReusedExchange) and needs
+    # no cache
+    scored = copurchase_pmi(lineitem, min_orders=min_orders)
     fwd = scored.select(
         F.col("src").alias("antecedent"), F.col("dst").alias("consequent"),
         "n_both", F.col("n_src").alias("n_antecedent"), "lift")
@@ -260,10 +265,11 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     Output: (node, n_triangles BIGINT) for nodes in >= 1 triangle —
     integers, oracle-hash-exact. Sum over nodes = 3x triangle count.
     """
+    # feeds three join legs (rule 7): they share the distinct's
+    # shuffle through ReusedExchange, so no cache is needed
     canon = (edges.select("src", "dst")
              .filter(F.col("src") < F.col("dst"))
-             .distinct()
-             .cache())  # feeds three join legs (rule 7)
+             .distinct())
     e1 = canon.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     e2 = canon.select(F.col("src").alias("b"), F.col("dst").alias("c"))
     e3 = canon.select(F.col("src").alias("a"), F.col("dst").alias("c"))

@@ -14,11 +14,13 @@ month-grain summary table maintained alongside the fact load (the
   `_batch_id`-partitioned (count, decimal sum) partials), written by
   :func:`materialize` for a full refresh and maintained under multi-batch
   loads by :func:`append_batch` / :func:`maintain_incremental` with the
-  ingest writer's replay-safety and crash-safe autocompaction verbatim.
+  ingest writer's replay-safety and crash-safe fold on write verbatim
+  (the batch that crosses `max_partials` lands as a coverage compact).
 - CDC (r10): :func:`apply_cdc_batch` maintains the same tables under
-  RETRACTIONS (delete images ride the partial layout with weight -1 —
-  the partial algebra is a group, not just a monoid), covering the
-  online-retail cancellation case the reference drops at ingest;
+  RETRACTIONS (delete images ride the partial layout as signed terms —
+  negated values and a negative row count; the partial algebra is a
+  group, not just a monoid), covering the online-retail cancellation
+  case the reference drops at ingest;
   :func:`serve_as_of` time-travels any view to its state after
   maintenance batch N off the `_batch_id` ledger.
 - :func:`publish` registers the serving relations (the merged effective
@@ -578,8 +580,8 @@ def append_batch(spark: SparkSession, sf_dir: str, batch: DataFrame,
     """Maintain the views under one incremental load of new rows of
     `table`: write each SOURCE-MATCHING view's partial for this batch
     (replay-safe — a replayed batch_id overwrites exactly its own
-    partials) and autocompact when the partial count crosses the
-    threshold (crash-safe, ingest.autocompact_incremental_agg). Work is
+    partials), folding it into a compact when it would push the partial
+    count past max_partials (crash-safe, ingest._write_partial). Work is
     proportional to the BATCH, never the accumulated fact; views fed by
     other source tables are untouched (their batch streams maintain
     them separately)."""
@@ -602,19 +604,26 @@ def apply_cdc_batch(spark: SparkSession, sf_dir: str, batch_id: int,
     drops them at ingest; a warehouse that must UNWIND them instead
     needs retraction, not a fact rewrite).
 
-    Retractions ride the exact same partial layout with weight -1
-    (ingest.partial_multi_agg_batch_write weight_col): the partial
-    aggregates form a GROUP under addition, not just a monoid — a
-    deleted row contributes (-1, -value), exact-decimal negation
-    composes exactly, and replay/compaction/time-travel are inherited
-    unchanged (a replayed CDC batch overwrites its own partition; a
-    compact folds signed partials like any others). A grain whose rows
-    all retract nets to count 0 and is dropped at serve time
-    (_merge_partials), matching the base recompute, which would not
-    have the grain at all.
+    Retractions ride the exact same partial layout as signed terms:
+    the partial aggregates form a GROUP under addition, not just a
+    monoid. Each side of the batch is signed in the plan — a deleted
+    row contributes its negated values (exact-decimal negation keeps
+    the type) and a row count of -1 (or minus its fact-row count where
+    META names a count_col) — so inserts and deletes union into ONE
+    aggregation and ONE write per view, through the writer's count_col
+    path (ingest.partial_multi_agg_batch_write). Replay/compaction/
+    time-travel are inherited unchanged (a replayed CDC batch
+    overwrites its own partition; a compact folds signed partials like
+    any others). When the batch would push a view past `max_partials`
+    effective partials, the write itself folds it with them into one
+    coverage compact (ingest._write_partial), so a crossing commit is
+    still one write. A grain whose rows all retract nets to count 0 and
+    is dropped at serve time (_merge_partials), matching the base
+    recompute, which would not have the grain at all.
 
     Contract: `deletes` rows must be rows previously inserted (standard
-    CDC delete images). Work stays proportional to the batch — and the
+    CDC delete images); publish's liveness check refuses a view whose
+    grains net negative. Work stays proportional to the batch — and the
     batch is SCANNED ONCE (r11): when several views share the source,
     the insert/delete relations are pruned to the union of the group's
     source columns and persisted around the loop, so each view derives
@@ -639,45 +648,38 @@ def apply_cdc_batch(spark: SparkSession, sf_dir: str, batch_id: int,
                 del_persisted = True
 
     def maintain_one(name: str) -> None:
+        # each side carries its own sign: values negated on delete
+        # images (exact: -decimal keeps its type) and a count term `_c`
+        # of ±1, or ±the input row's fact-row count where META names a
+        # count_col; the writer sums `_c` into `_n` (its count_col path)
         table_dir = view_table_dir(sf_dir, name, storage_dir)
         _check_or_stamp_layout(table_dir, name)
-        keys = list(MATVIEW_META[name]["grain"])
-        sum_type = MATVIEW_META[name].get("sum_type", _MV_SUM_TYPE)
-        count_col = MATVIEW_META[name].get("count_col")
-        if deletes is None:
-            # pure-append fast path: identical plan to the pre-CDC
-            # writer (COUNT + unweighted sums), no weight column
-            inp = MATVIEW_INPUTS[name](spark, sf_dir, inserts)
-            ingest.partial_multi_agg_batch_write(
-                inp, batch_id, table_dir, keys,
-                [c for c in inp.columns if c.startswith("_v")],
-                sum_type=sum_type, count_col=count_col)
-        else:
-            sides = []
-            if inserts is not None:
-                sides.append(
-                    MATVIEW_INPUTS[name](spark, sf_dir, inserts)
-                    .withColumn("_w", F.lit(1)))
-            sides.append(MATVIEW_INPUTS[name](spark, sf_dir, deletes)
-                         .withColumn("_w", F.lit(-1)))
-            inp = sides[0]
-            for s in sides[1:]:
-                inp = inp.unionByName(s)
-            ingest.partial_multi_agg_batch_write(
-                inp, batch_id, table_dir, keys,
-                [c for c in inp.columns if c.startswith("_v")],
-                sum_type=sum_type, weight_col="_w",
-                count_col=count_col)
-        if max_partials is not None and \
-                len(ingest.effective_partials(table_dir)) > max_partials:
-            ingest.autocompact_incremental_agg(spark, table_dir, keys,
-                                               sum_type=sum_type)
+        meta = MATVIEW_META[name]
+        keys = list(meta["grain"])
+        rows = F.col(meta["count_col"]) if meta.get("count_col") \
+            else F.lit(1)
+        inp = None
+        for batch, signed in ((inserts, lambda e: e),
+                              (deletes, lambda e: -e)):
+            if batch is None:
+                continue
+            side = MATVIEW_INPUTS[name](spark, sf_dir, batch)
+            values = [c for c in side.columns if c.startswith("_v")]
+            side = side.select(
+                *keys, *[signed(F.col(c)).alias(c) for c in values],
+                signed(rows).alias("_c"))
+            inp = side if inp is None else inp.unionByName(side)
+        ingest.partial_multi_agg_batch_write(
+            inp, batch_id, table_dir, keys, values,
+            sum_type=meta.get("sum_type", _MV_SUM_TYPE), count_col="_c",
+            max_partials=max_partials)
 
     # same-source views maintain CONCURRENTLY (r11): each view's write
-    # + possible autocompaction touches only its own table dir and the
-    # shared batch is persisted above — per-micro-batch latency drops
-    # to the slowest single view instead of the sum (measured in
-    # scripts/cdc_stream_sf01.py / PERFORMANCE.md)
+    # (folded into a compact when it crosses max_partials) touches only
+    # its own table dir and the shared batch is persisted above —
+    # per-micro-batch latency drops to the slowest single view instead
+    # of the sum (measured in scripts/cdc_stream_sf01.py /
+    # PERFORMANCE.md)
     try:
         _run_concurrently(maintain_one, group)
     finally:
@@ -765,11 +767,7 @@ def apply_star_cdc_join(spark: SparkSession, sf_dir: str, batch_id: int,
     sum_type = MATVIEW_META[name].get("sum_type", _MV_SUM_TYPE)
     ingest.partial_multi_agg_batch_write(
         inp, batch_id, table_dir, keys, ["_v"],
-        sum_type=sum_type, weight_col="_w")
-    if max_partials is not None and \
-            len(ingest.effective_partials(table_dir)) > max_partials:
-        ingest.autocompact_incremental_agg(spark, table_dir, keys,
-                                           sum_type=sum_type)
+        sum_type=sum_type, weight_col="_w", max_partials=max_partials)
 
 
 def maintain_incremental(source_stream: DataFrame, sf_dir: str,
@@ -783,7 +781,7 @@ def maintain_incremental(source_stream: DataFrame, sf_dir: str,
     — the production shape of the module docstring's claim: foreachBatch
     routes each micro-batch through append_batch, inheriting the ingest
     writer's exactly-once story (partials per `_batch_id`, replay
-    overwrites itself, crash-safe autocompaction). Call publish() after
+    overwrites itself, crash-safe fold on write). Call publish() after
     the run (or on a schedule) to refresh the serving relations.
 
     op_col (r10, CDC): name of a change-op column to interpret the
@@ -809,9 +807,9 @@ def maintain_incremental(source_stream: DataFrame, sf_dir: str,
                 return
             # ONE tiny pass both validates the ops (NULL included — a
             # bare ~isin() is NULL for NULL ops and would let the row
-            # slip through, then vanish from both sides) and routes
-            # insert-only micro-batches (the normal retail case) to the
-            # append fast path instead of the weighted union plan (r10
+            # slip through, then vanish from both sides) and leaves out
+            # a side the micro-batch has no rows for, so an insert-only
+            # batch (the normal retail case) plans no delete leg (r10
             # review finds)
             ops = {r[0]: r[1] for r in
                    batch_df.groupBy(op_col).count().collect()}

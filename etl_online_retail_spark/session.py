@@ -51,6 +51,19 @@ _RUNTIME_CONFS = {
 }
 
 
+# Spark's generated-class cache (static: read once when the session's
+# JVM starts). Its default of 100 entries is smaller than a serving
+# process's working set: the perfbench maintain loop (sf0.01, CDC
+# commits on the matviews, each followed by an 8-query dashboard
+# refresh) recompiled 44-52 classes per refresh and 87-141 per commit
+# at 100, every one a plan compiled one cycle earlier. Measured on that
+# loop (4 vCPU, seeds 7 and 11): 150 entries still recompile 0-36
+# classes per refresh; 200 hold refreshes at 0 but commits at 12-22;
+# 250 hold refreshes at 0 and commits at their floor of 8 (classes
+# that inline a new batch id, never reused).
+CODEGEN_CACHE_ENTRIES = 250
+
+
 def default_parallelism() -> int:
     """CPU budget: $SPARK_GRAFT_CPUS in the harness, else all local cores."""
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -74,6 +87,8 @@ def get_spark(app_name: str = "etl-online-retail-spark",
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
         # Local harness: the testdata tables are single small parquet files,
         # so a 128 MB split size would scan them single-threaded; 4 MB keeps
         # all cores busy (bounded below by row-group size). On a real
@@ -193,7 +208,10 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
 
     The correctness driver hands us its own SparkSession; all confs in
     _RUNTIME_CONFS are runtime-settable SQL confs, so this is safe on any
-    live session.
+    live session. Static confs cannot be applied here: a session we did
+    not build keeps its own spark.sql.codegen.cache.maxEntries (Spark's
+    default 100, not CODEGEN_CACHE_ENTRIES), which only costs
+    recompiles, never results.
     """
     for key, value in _RUNTIME_CONFS.items():
         try:

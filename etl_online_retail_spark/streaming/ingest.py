@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 
 def idempotent_batch_write(batch_df: DataFrame, batch_id: int,
@@ -151,7 +152,8 @@ def partial_agg_batch_write(batch_df: DataFrame, batch_id: int,
                             table_dir: str, key_cols: list[str],
                             value_col: str,
                             value_type: str = "decimal(18,2)",
-                            sum_type: str = _PARTIAL_SUM_TYPE) -> None:
+                            sum_type: str = _PARTIAL_SUM_TYPE,
+                            max_partials: int | None = None) -> None:
     """Materialized-aggregate maintenance, replay-safe by construction.
 
     Summing a replayed batch into a running total double-counts; instead
@@ -168,16 +170,16 @@ def partial_agg_batch_write(batch_df: DataFrame, batch_id: int,
     operators/matview.py). ONE table must use one (value_type, sum_type)
     pair for its whole life — the schema-pin rationale above the
     _PARTIAL_SUM_TYPE constant applies to whatever type the table picked.
+
+    max_partials: fold on write (_write_partial) once the batch would
+    push the effective partial count past it; None never folds.
     """
     part = (batch_df.groupBy(*key_cols)
             .agg(F.count(F.lit(1)).alias("_n"),
                  F.sum(F.col(value_col).cast(value_type))
                  .cast(sum_type).alias("_sum")))
-    (part.withColumn("_batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("_batch_id")
-     .parquet(table_dir))
+    _write_partial(part, batch_id, table_dir, key_cols, sum_type,
+                   max_partials)
 
 
 def partial_multi_agg_batch_write(batch_df: DataFrame, batch_id: int,
@@ -185,7 +187,8 @@ def partial_multi_agg_batch_write(batch_df: DataFrame, batch_id: int,
                                   value_cols: list[str],
                                   sum_type: str = _PARTIAL_SUM_TYPE,
                                   weight_col: str | None = None,
-                                  count_col: str | None = None) -> None:
+                                  count_col: str | None = None,
+                                  max_partials: int | None = None) -> None:
     """partial_agg_batch_write generalized to MANY measures: a real
     summary table carries several composable partials per grain (TPC-H
     Q1 keeps five decimal sums + a count). Each value column (already
@@ -214,7 +217,16 @@ def partial_multi_agg_batch_write(batch_df: DataFrame, batch_id: int,
     retraction (a grain can net slice-count 0 with live rows, or +1
     with none). count_col names an integer column carrying each input
     row's TRUE fact-row count; `_n` becomes SUM(count x weight), a real
-    signed row count whatever the input granularity."""
+    signed row count whatever the input granularity. A caller that
+    signs its own rows (matview.apply_cdc_batch negates each delete
+    image's values and carries a ±1 or ±row-count term) passes that
+    term as count_col and no weight_col: the batch is then one
+    aggregation and one write, with no ±1 check to run.
+
+    max_partials: when this batch would push the table's effective
+    partial count past it, the batch folds on write — its partial and
+    the effective partials merge into one coverage compact in the same
+    plan (_write_partial); None never folds."""
     if weight_col is None:
         aggs = [(F.sum(F.col(count_col)).cast("bigint") if count_col
                  else F.count(F.lit(1))).alias("_n")]
@@ -248,6 +260,27 @@ def partial_multi_agg_batch_write(batch_df: DataFrame, batch_id: int,
                 f"(insert/retract signs, not a general multiplier); "
                 f"{n_bad} row(s) violate that — nothing was written")
         part = part.drop("_bad_w")
+    _write_partial(part, batch_id, table_dir, key_cols, sum_type,
+                   max_partials)
+
+
+def _write_partial(part: DataFrame, batch_id: int, table_dir: str,
+                   key_cols: list[str], sum_type: str,
+                   max_partials: int | None) -> None:
+    """Land batch `batch_id`'s partial aggregate `part` (keys, `_n`,
+    `_sum*`) as its own `_batch_id` partition, or FOLD it on write:
+    when the partition would push the effective set past
+    `max_partials`, `part` and the rest of that set merge in one plan
+    into a coverage compact (_fold) and no `_batch_id=batch_id`
+    original is written at all. A replay of a batch a compact already
+    covers is not in the effective set, so it lands as an original
+    that readers ignore, as it always has."""
+    if max_partials is not None and batch_id >= 0:
+        after = _effective(set(_list_partials(table_dir)) | {batch_id})
+        if batch_id in after and len(after) > max_partials:
+            _fold(part.sparkSession, table_dir, key_cols, sum_type,
+                  [b for b in after if b != batch_id], part, batch_id)
+            return
     (part.withColumn("_batch_id", F.lit(batch_id))
      .write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
@@ -267,20 +300,17 @@ def incremental_agg(stream_df: DataFrame, table_dir: str,
                     max_partials: int | None = 8) -> StreamingQuery:
     """Maintain per-key (count, sum) incrementally over a stream.
 
-    With `max_partials` set (ROADMAP 15), the writer auto-compacts: once
-    the effective partial count crosses the threshold, the batch folds
-    everything so far into one coverage-encoded compact partition
-    (autocompact_incremental_agg — crash-safe, see its docstring), keeping
-    the read-side merge input O(keys + threshold), not O(batches x keys).
+    With `max_partials` set (ROADMAP 15), the writer auto-compacts: the
+    batch that would push the effective partial count past the threshold
+    folds everything so far, itself included, into one coverage-encoded
+    compact partition as it writes (_write_partial — crash-safe, see
+    autocompact_incremental_agg), keeping the read-side merge input
+    O(keys + threshold), not O(batches x keys).
     """
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         partial_agg_batch_write(batch_df, batch_id, table_dir, key_cols,
-                                value_col)
-        if max_partials is not None:
-            spark = batch_df.sparkSession
-            if len(_effective_partials(table_dir)) > max_partials:
-                autocompact_incremental_agg(spark, table_dir, key_cols)
+                                value_col, max_partials=max_partials)
 
     return (stream_df.writeStream
             .foreachBatch(write_batch)
@@ -322,7 +352,12 @@ def effective_partials(table_dir: str) -> list[int]:
     already inside the widest compact — so a crash between the compact
     write and its cleanup can never double-count or lose rows.
     """
-    parts = _list_partials(table_dir)
+    return _effective(_list_partials(table_dir))
+
+
+def _effective(parts) -> list[int]:
+    """effective_partials over a given partition listing."""
+    parts = list(parts)
     compacts = [b for b in parts if b <= -2]
     if not compacts:
         return parts
@@ -339,7 +374,9 @@ def autocompact_incremental_agg(spark, table_dir: str,
                                 key_cols: list[str],
                                 sum_type: str = _PARTIAL_SUM_TYPE) -> None:
     """Fold the effective partials into one compact partition, crash-safe
-    at every step (safe to call from inside foreachBatch):
+    at every step (safe to call from inside foreachBatch). This is the
+    writers' fold on write (_write_partial) with no batch to add: the
+    nightly-compaction shape (matview.compact) and explicit calls.
 
     1. Merge the current effective set (widest compact + live originals)
        and write it as a NEW compact with coverage = the highest original
@@ -353,23 +390,47 @@ def autocompact_incremental_agg(spark, table_dir: str,
     identical to what the compact holds (partials are deterministic per
     batch), so replay stays exactly-once.
     """
+    _fold(spark, table_dir, key_cols, sum_type,
+          _effective_partials(table_dir))
+
+
+def _fold(spark, table_dir: str, key_cols: list[str], sum_type: str,
+          read_set: list[int], part: DataFrame | None = None,
+          batch_id: int | None = None) -> None:
+    """Merge the partitions `read_set` (plus batch `batch_id`'s partial
+    `part`, when given) into the compact `-max(originals) - 2` with one
+    dynamic-overwrite write, then delete every partition it covers.
+
+    With a batch, the read uses the partial's own schema, so no footer
+    inference job runs. The compact's id is never in `read_set` (any
+    existing compact that wide would already cover every original in
+    it), so the write reads none of the partitions it replaces and
+    needs no checkpoint in between."""
     import os
     import shutil
 
-    effective = _effective_partials(table_dir)
-    originals = [b for b in effective if b >= 0]
+    originals = [b for b in read_set if b >= 0]
+    if part is not None:
+        originals.append(batch_id)
     if not originals:
         return
     new_id = -max(originals) - 2
-    src = (spark.read.parquet(table_dir)
-           .filter(F.col("_batch_id").isin(effective)))
-    merged = (src.groupBy(*key_cols)
-              .agg(F.sum("_n").alias("_n"),
-                   *[F.sum(c).cast(sum_type).alias(c)
-                     for c in _sum_columns(src)])
-              .withColumn("_batch_id", F.lit(new_id))
-              .localCheckpoint(eager=True))  # reads the dir it overwrites
-    (merged.write.mode("overwrite")
+    src = part
+    if read_set:
+        reader = spark.read
+        if part is not None:
+            reader = reader.schema(StructType(
+                part.schema.fields + [StructField("_batch_id",
+                                                  IntegerType())]))
+        old = (reader.parquet(table_dir)
+               .filter(F.col("_batch_id").isin(read_set))
+               .drop("_batch_id"))
+        src = old if part is None else old.unionByName(part)
+    merged = src.groupBy(*key_cols).agg(
+        F.sum("_n").alias("_n"),
+        *[F.sum(c).cast(sum_type).alias(c) for c in _sum_columns(src)])
+    (merged.withColumn("_batch_id", F.lit(new_id))
+     .write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
      .partitionBy("_batch_id")
      .parquet(table_dir))

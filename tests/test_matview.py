@@ -11,7 +11,11 @@ import pytest
 
 from etl_online_retail_spark.operators import matview
 
-from conftest import SF_SMALL, assert_no_exchange_above_cache
+from conftest import (
+    SF_SMALL,
+    assert_no_exchange_above_cache,
+    new_plan_descriptions,
+)
 
 
 def _rows(df):
@@ -850,6 +854,95 @@ def test_cdc_retractions_maintain_views_exactly(spark, tmp_path):
                             names=names, storage_dir=store, max_partials=2)
     for name in names:
         assert served(name) == _logical_over(spark, name, s0), name
+
+
+def _stored(spark, table_dir):
+    """Every stored partial row, partition id included, sorted."""
+    return sorted(map(tuple, spark.read.parquet(table_dir).collect()))
+
+
+def test_cdc_fold_on_write_leaves_one_compact(spark, tmp_path):
+    """A commit that would push a view past max_partials folds on
+    write: its partial and the effective set land as ONE compact
+    `-b-2`, no `_batch_id=b` original is ever written, and the table
+    holds exactly what write-then-autocompact leaves. A replay of the
+    folded batch afterwards changes neither the served rows nor
+    as_of_partials(b)."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from etl_online_retail_spark import catalog
+    from etl_online_retail_spark.streaming import ingest
+
+    li = catalog.load_table(spark, "lineitem", SF_SMALL).cache()
+    shard = F.pmod(F.col("l_orderkey"), F.lit(2))
+    s0, s1 = li.filter(shard == 0), li.filter(shard == 1)
+    names = ["ship_day_rollup", "flag_day_rollup", "star_month_rollup"]
+    fold, ref = str(tmp_path / "fold"), str(tmp_path / "ref")
+    schedule = [dict(inserts=s0), dict(inserts=s1), dict(deletes=s1)]
+    for b, change in enumerate(schedule):
+        matview.apply_cdc_batch(spark, SF_SMALL, b, names=names,
+                                storage_dir=fold, max_partials=2, **change)
+        matview.apply_cdc_batch(spark, SF_SMALL, b, names=names,
+                                storage_dir=ref, max_partials=None,
+                                **change)
+    for name in names:
+        meta = matview.MATVIEW_META[name]
+        ref_dir = matview.view_table_dir(SF_SMALL, name, ref)
+        ingest.autocompact_incremental_agg(
+            spark, ref_dir, list(meta["grain"]), sum_type=meta.get(
+                "sum_type", matview._MV_SUM_TYPE))
+        tdir = matview.view_table_dir(SF_SMALL, name, fold)
+        assert ingest._list_partials(tdir) == [-4], name
+        assert _stored(spark, tdir) == _stored(spark, ref_dir), name
+        served = sorted(map(tuple, matview._serving_relation(
+            spark, tdir, name).collect()))
+        assert served == _logical_over(spark, name, s0), name
+
+        # replay of the folded batch: an ignored, covered original
+        assert ingest.as_of_partials(tdir, 2) == [-4]
+        matview.apply_cdc_batch(spark, SF_SMALL, 2, deletes=s1,
+                                names=[name], storage_dir=fold,
+                                max_partials=2)
+        assert os.path.isdir(os.path.join(tdir, "_batch_id=2")), name
+        assert ingest.effective_partials(tdir) == [-4], name
+        assert ingest.as_of_partials(tdir, 2) == [-4], name
+        assert sorted(map(tuple, matview._serving_relation(
+            spark, tdir, name).collect())) == served, name
+        assert sorted(map(tuple, matview.serve_as_of(
+            spark, SF_SMALL, name, 2, storage_dir=fold).collect())) \
+            == served, name
+
+
+def test_crossing_delete_commit_is_one_write(spark, tmp_path):
+    """A delete commit on one view that crosses max_partials is one SQL
+    execution, the write: deletes are signed in the plan (no weight
+    column, so no localCheckpoint and no `_bad_w` collect) and the fold
+    rides inside that write (no separate compaction pass)."""
+    from pyspark.sql import functions as F
+
+    from etl_online_retail_spark import catalog
+    from etl_online_retail_spark.streaming.ingest import _list_partials
+
+    store = str(tmp_path / "mv_store")
+    li = catalog.load_table(spark, "lineitem", SF_SMALL).cache()
+    s1 = li.filter(F.pmod(F.col("l_orderkey"), F.lit(2)) == 1)
+    names = ["ship_day_rollup"]
+    matview.apply_cdc_batch(spark, SF_SMALL, 0, inserts=li, names=names,
+                            storage_dir=store, max_partials=1)
+    plans = new_plan_descriptions(spark, lambda: matview.apply_cdc_batch(
+        spark, SF_SMALL, 1, deletes=s1, names=names, storage_dir=store,
+        max_partials=1))
+    assert len(plans) == 1, [p[:200] for p in plans]
+    assert "InsertIntoHadoopFsRelationCommand" in plans[0]
+    tdir = matview.view_table_dir(SF_SMALL, "ship_day_rollup", store)
+    assert _list_partials(tdir) == [-3]
+    served = sorted(map(tuple, matview._serving_relation(
+        spark, tdir, "ship_day_rollup").collect()))
+    assert served == _logical_over(
+        spark, "ship_day_rollup",
+        li.filter(F.pmod(F.col("l_orderkey"), F.lit(2)) == 0))
 
 
 def test_cdc_maintenance_is_a_property(spark, tmp_path):

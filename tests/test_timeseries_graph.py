@@ -17,9 +17,12 @@ from etl_online_retail_spark.operators.dedup import (
 )
 from etl_online_retail_spark.operators.graph import (
     copurchase_edges,
+    copurchase_pmi,
+    copurchase_rules,
     khop_distances,
     pagerank,
     personalized_pagerank,
+    triangle_counts,
 )
 from etl_online_retail_spark.operators.timeseries import (
     activity_streaks,
@@ -591,6 +594,28 @@ def _pairs(spark):
 def test_round_loops_return_holding_no_cache(spark, run):
     """Round state is cut, never cached: one call leaves the cache
     manager where it found it."""
+    before = cached_entries(spark)
+    assert run(spark).collect()
+    assert cached_entries(spark) == before
+
+
+def _baskets(spark):
+    # orders 1-3 each hold parts 1, 2 and 3; order 4 holds parts 3, 4
+    rows = [(o, p) for o in (1, 2, 3) for p in (1, 2, 3)]
+    rows += [(4, 3), (4, 4), (4, 4)]
+    return spark.createDataFrame(rows, "l_orderkey BIGINT, l_partkey BIGINT")
+
+
+@pytest.mark.parametrize("run", [
+    lambda spark: copurchase_pmi(_baskets(spark)),
+    lambda spark: copurchase_rules(_baskets(spark)),
+    lambda spark: triangle_counts(_chain(spark, 4).unionByName(
+        spark.createDataFrame([(1, 3), (3, 1)], "src INT, dst INT"))),
+], ids=["copurchase_pmi", "copurchase_rules", "triangle_counts"])
+def test_graph_scores_return_holding_no_cache(spark, run):
+    """The association scores and triangle counts share their reused
+    subtrees through a cut or the plan's own exchange reuse, never a
+    cache: one call leaves the cache manager where it found it."""
     before = cached_entries(spark)
     assert run(spark).collect()
     assert cached_entries(spark) == before
