@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_online_retail_spark.session import cut_lineage
+from etl_online_retail_spark.session import cut_lineage, cut_observed
 from pyspark.sql import types as T
 
 from etl_online_retail_spark.functions.text import normalize, tokens
@@ -46,17 +46,18 @@ def word_table_venue(docs: DataFrame, text_col: str,
     on an observed count rather than an estimate.
 
     The corpus-sized aggregation (word frequencies) runs distributed and
-    is cached, so the count and whichever venue follows read it once.
-    Up to `max_words` words: returns ({word: freq}, None), collected and
-    released — a loop of distributed rounds over a vocabulary this small
-    is pure scheduling and Python-worker start-up. Past it: returns
-    (None, the cached (word, freq) relation), which the caller trains on
-    distributed and unpersists."""
-    wf = word_frequencies(docs, text_col).cache()
-    if wf.count() <= max_words:
-        freqs = {r.word: int(r.freq) for r in wf.collect()}
-        wf.unpersist()
-        return freqs, None
+    is cut (session.cut_observed), so its row count rides the one job
+    that materializes it and whichever venue follows reads the cut.
+    Up to `max_words` words: returns ({word: freq}, None), collected
+    from the cut — a loop of distributed rounds over a vocabulary this
+    small is pure scheduling and Python-worker start-up. Past it:
+    returns (None, the cut (word, freq) relation), which the caller
+    trains on distributed. Nothing is cached, so the caller has nothing
+    to release."""
+    wf, m = cut_observed(word_frequencies(docs, text_col),
+                         F.count(F.lit(1)).alias("n"))
+    if m["n"] <= max_words:
+        return {r.word: int(r.freq) for r in wf.collect()}, None
     return None, wf
 
 
@@ -160,7 +161,6 @@ def bpe_train(docs: DataFrame, n_merges: int = 50,
     words = (wf
              .select(F.split(F.col("word"), "").alias("syms"), "freq")
              .transform(cut_lineage))
-    wf.unpersist()
 
     merges: list[tuple[str, str]] = []
     rounds = 0

@@ -31,6 +31,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_online_retail_spark.operators.joins import size_guarded_broadcast
 from etl_online_retail_spark.session import cut_lineage, cut_observed
 
 from etl_online_retail_spark.functions.hashing import bit, minhash_signature
@@ -284,13 +285,21 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
                                        F.col("id_a").alias("dst"))))
     # one materialization of the (expensive) pair lineage, reused every round
     edges = edges.transform(cut_lineage)
-    labels = (edges.select(F.col("src").alias("node"))
-              .distinct()
-              .withColumn("label", F.col("node"))).transform(cut_lineage)
+    labels, m = cut_observed(
+        edges.select(F.col("src").alias("node"))
+        .distinct()
+        .withColumn("label", F.col("node")),
+        F.count(F.lit(1)).alias("n"))
+    # every round's labels and neighbour minima hold at most one row per
+    # node: broadcast both by that count, not by the cuts' compounding
+    # size estimates (which planned each round as SortMergeJoins)
+    n_nodes = m["n"]
     for _ in range(max_iterations):
-        neighbour_min = (edges.join(labels, edges.dst == labels.node)
+        lab = size_guarded_broadcast(labels, rows=n_nodes)
+        neighbour_min = (edges.join(lab, edges.dst == lab.node)
                          .groupBy("src")
                          .agg(F.min("label").alias("nmin")))
+        neighbour_min = size_guarded_broadcast(neighbour_min, rows=n_nodes)
         # "did any label move?" is observed on the round's cut: no
         # second job per round
         updated, m = cut_observed(
@@ -338,14 +347,22 @@ def duplicate_clusters_star(pairs: DataFrame,
     Rounds are driver-coordinated but the per-round work is fully
     distributed (the same trade Spark ML's KMeans makes).
     """
-    nodes = (pairs.select(F.col("id_a").alias("node"))
-             .unionByName(pairs.select(F.col("id_b").alias("node")))
-             .distinct()
-             .transform(cut_lineage))
+    nodes, m = cut_observed(
+        pairs.select(F.col("id_a").alias("node"))
+        .unionByName(pairs.select(F.col("id_b").alias("node")))
+        .distinct(),
+        F.count(F.lit(1)).alias("n"))
+    # every per-node relation a round joins (each star's minima, the
+    # final roots) has at most one row per node: broadcast it by that
+    # count, not by the cuts' compounding size estimates
+    n_nodes = m["n"]
     edges = (pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
              .filter(F.col("src") != F.col("dst"))
              .distinct()
              .transform(cut_lineage))
+
+    def per_node(df: DataFrame) -> DataFrame:
+        return size_guarded_broadcast(df, rows=n_nodes)
 
     prev = None
     for _ in range(max_iterations):
@@ -354,7 +371,7 @@ def duplicate_clusters_star(pairs: DataFrame,
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         mins = (bi.groupBy("src")
                 .agg(F.least(F.min("dst"), F.first("src")).alias("m")))
-        edges = (bi.join(mins, "src")
+        edges = (bi.join(per_node(mins), "src")
                  .filter(F.col("dst") > F.col("src"))
                  .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
                  .filter(F.col("src") != F.col("dst"))
@@ -365,7 +382,7 @@ def duplicate_clusters_star(pairs: DataFrame,
             F.least("src", "dst").alias("dst"))
         mins = (oriented.groupBy("src")
                 .agg(F.least(F.min("dst"), F.first("src")).alias("m")))
-        joined = oriented.join(mins, "src")
+        joined = oriented.join(per_node(mins), "src")
         # the edge-set checksum is observed on the round's cut. bit_xor
         # never overflows (ANSI-safe), and is multiset-insensitive only
         # to duplicate rows — which distinct() already removed.
@@ -391,7 +408,7 @@ def duplicate_clusters_star(pairs: DataFrame,
 
     # converged edge set is a star forest: node -> component min; roots
     # (and isolated nodes) label themselves
-    labels = edges.groupBy("src").agg(F.min("dst").alias("_root"))
+    labels = per_node(edges.groupBy("src").agg(F.min("dst").alias("_root")))
     return (nodes.join(labels, nodes.node == labels.src, "left")
             .select(F.col("node").alias("doc_id"),
                     F.coalesce(F.col("_root"), F.col("node"))

@@ -215,7 +215,7 @@ def _estep_distributed(words: DataFrame, logp: dict[str, float],
     n_tasks x |inventory| exceeds UNIGRAM_DRIVER_MERGE_MAX_ROWS the
     partials reduce in-plan to |inventory| rows first, keeping the
     collect inventory-bounded at any partition count. Callers pass
-    n_tasks (the cached word relation's partition count) so the check
+    n_tasks (the cut word relation's partition count) so the check
     costs nothing per round."""
     lp = dict(logp)  # pinned closure copy
 
@@ -279,13 +279,12 @@ def unigram_train(docs: DataFrame, vocab_size: int = UNIGRAM_VOCAB_SIZE,
         return unigram_train_sequential(freqs, vocab_size, n_seed,
                                         max_piece_len, shrink, em_iters)
     seed_counts, chars = seed_candidates(words, n_seed, max_piece_len)
-    # partition count of the materialized cached word relation, read
-    # once: the E-step's driver-merge bound needs it every round
+    # partition count of the cut word relation, read once: the
+    # E-step's driver-merge bound needs it every round
     n_tasks = words.rdd.getNumPartitions()
     logp = _train_loop(
         lambda lp: _estep_distributed(words, lp, max_piece_len, n_tasks),
         seed_counts, chars, vocab_size, shrink, em_iters, max_piece_len)
-    words.unpersist()
     return sorted(logp.items(), key=lambda kv: (-kv[1], kv[0]))
 
 

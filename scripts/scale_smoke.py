@@ -575,20 +575,24 @@ def main() -> None:
 
     # k-hop BFS: edge build (support-thresholded pair agg) + bounded
     # frontier expansions; frontier joins shuffle frontier-incident edges
-    # only. Seeds scale with the part-key space.
+    # only. Seeds scale with the part-key space. The bound is set to 0
+    # for the call, so the distributed hop loop runs at every factor
+    # instead of the in-memory venue below the bound.
     def bfs():
-        from etl_online_retail_spark.operators.graph import (
-            copurchase_edges,
-            khop_distances,
-        )
+        from etl_online_retail_spark.operators import graph
 
         p_rep = replicate(load_table(spark, "part", SF_DIR), factor,
                           {"p_partkey": 10_000_000})
-        edges = copurchase_edges(li, min_orders=2)
+        edges = graph.copurchase_edges(li, min_orders=2)
         seeds = (p_rep.filter(F.pmod(F.col("p_partkey"), F.lit(499)) == 0)
                  .select(F.col("p_partkey").alias("node")))
-        khop_distances(edges, seeds, max_hops=4) \
-            .write.format("noop").mode("overwrite").save()
+        bound = graph.KHOP_DRIVER_ROWS
+        graph.KHOP_DRIVER_ROWS = 0
+        try:
+            graph.khop_distances(edges, seeds, max_hops=4) \
+                .write.format("noop").mode("overwrite").save()
+        finally:
+            graph.KHOP_DRIVER_ROWS = bound
 
     # PQ: driver-side codebook train on the BOUNDED sample (constant),
     # distributed encode (one numpy argmin pass per Arrow batch) + ADC

@@ -86,7 +86,12 @@ def test_each_cut_evaluates_its_input_once(spark, tmp_path, monkeypatch,
 
 
 def test_khop_identical_in_both_cut_modes(spark, tmp_path, monkeypatch):
+    from etl_online_retail_spark.operators import graph
     from etl_online_retail_spark.operators.graph import khop_distances
+
+    # the hop loop's cuts: a graph this small would otherwise run on
+    # the driver
+    monkeypatch.setattr(graph, "KHOP_DRIVER_ROWS", 0)
 
     edges = [(a, b) for a, b in [(1, 2), (2, 3), (3, 4), (2, 5), (6, 7)]]
     edges += [(b, a) for a, b in edges]

@@ -15,6 +15,7 @@ from etl_online_retail_spark.operators.dedup import (
     duplicate_clusters_star,
     remove_repeated_segments,
 )
+from etl_online_retail_spark.operators import graph
 from etl_online_retail_spark.operators.graph import (
     copurchase_edges,
     copurchase_pmi,
@@ -181,40 +182,124 @@ def chain_graph(spark):
     return spark.createDataFrame(edges, "src INT, dst INT")
 
 
-def test_khop_chain_distances(spark, chain_graph):
+def _venues(monkeypatch):
+    """Runs a khop test's loop body on the driver (the default bound
+    keeps these small graphs there), then in the distributed hop loop
+    (bound 0)."""
+    yield "driver"
+    monkeypatch.setattr(graph, "KHOP_DRIVER_ROWS", 0)
+    yield "distributed"
+
+
+@pytest.fixture
+def distributed(monkeypatch):
+    """Pins a test of the hop loop's plans to the distributed venue."""
+    monkeypatch.setattr(graph, "KHOP_DRIVER_ROWS", 0)
+
+
+def _distances(df) -> dict:
+    return {r.node: r.dist for r in df.collect()}
+
+
+def test_khop_chain_distances(spark, chain_graph, monkeypatch):
     seeds = spark.createDataFrame([(1,)], "node INT")
-    got = {r.node: r.dist
-           for r in khop_distances(chain_graph, seeds, max_hops=10).collect()}
-    assert got == {1: 0, 2: 1, 3: 2, 4: 3, 5: 4}
+    for venue in _venues(monkeypatch):
+        got = _distances(khop_distances(chain_graph, seeds, max_hops=10))
+        assert got == {1: 0, 2: 1, 3: 2, 4: 3, 5: 4}, venue
 
 
-def test_khop_respects_max_hops(spark, chain_graph):
+def test_khop_respects_max_hops(spark, chain_graph, monkeypatch):
     seeds = spark.createDataFrame([(1,)], "node INT")
-    got = {r.node: r.dist
-           for r in khop_distances(chain_graph, seeds, max_hops=2).collect()}
-    assert got == {1: 0, 2: 1, 3: 2}  # 4, 5 beyond the bound
+    for venue in _venues(monkeypatch):
+        got = _distances(khop_distances(chain_graph, seeds, max_hops=2))
+        assert got == {1: 0, 2: 1, 3: 2}, venue  # 4, 5 beyond the bound
 
 
-def test_khop_multi_seed_takes_min_distance(spark, chain_graph):
+def test_khop_multi_seed_takes_min_distance(spark, chain_graph, monkeypatch):
     seeds = spark.createDataFrame([(1,), (5,)], "node INT")
-    got = {r.node: r.dist
-           for r in khop_distances(chain_graph, seeds, max_hops=10).collect()}
-    assert got == {1: 0, 5: 0, 2: 1, 4: 1, 3: 2}
+    for venue in _venues(monkeypatch):
+        got = _distances(khop_distances(chain_graph, seeds, max_hops=10))
+        assert got == {1: 0, 5: 0, 2: 1, 4: 1, 3: 2}, venue
 
 
-def test_khop_releases_caches(spark, chain_graph):
+def _in_both_venues(monkeypatch, run) -> dict:
+    """{venue: (sorted rows, schema string)} of `run()`."""
+    def once():
+        df = run()
+        rows = sorted(map(tuple, df.collect()),
+                      key=lambda r: (r[0] is None, r[0] or 0, r[1]))
+        return rows, df.schema.simpleString()
+
+    return {venue: once() for venue in _venues(monkeypatch)}
+
+
+def test_khop_null_node_appears_once_in_both_venues(spark, monkeypatch):
+    """A null node is one node: the null seed settles it at 0, and the
+    null dsts reached at hops 2 and 3 are already settled. An edge
+    whose src is null never expands (3 is unreachable). The hop loop's
+    anti-join on `node` never matched a null, so it emitted the null
+    node once per hop that reached it."""
+    e = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 3), (2, 4), (4, None)],
+        "src INT, dst INT")
+    s = spark.createDataFrame([(1,), (None,), (1,)], "node INT")
+    got = _in_both_venues(monkeypatch,
+                          lambda: khop_distances(e, s, max_hops=4))
+    assert got["driver"] == got["distributed"] == (
+        [(1, 0), (2, 1), (4, 2), (None, 0)], "struct<node:int,dist:int>")
+
+
+# the ring 1->2->...->6->1 with a chord 2->5 and an in-edge 9->1
+_RING = [(a, a % 6 + 1) for a in range(1, 7)] + [(2, 5), (9, 1)]
+_FROM_1 = [(1, 0), (2, 1), (3, 2), (4, 3), (5, 2), (6, 3)]
+
+
+@pytest.mark.parametrize("seeds, hops, edge_type, want", [
+    ([1, 4, 1, 4], 3, "INT", [(1, 0), (2, 1), (3, 2), (4, 0), (5, 1),
+                              (6, 2)]),
+    ([1, 42, 43], 3, "INT", _FROM_1 + [(42, 0), (43, 0)]),
+    ([1, 3, 1], 0, "INT", [(1, 0), (3, 0)]),
+    ([1], 10, "INT", _FROM_1),
+    ([1], 3, "BIGINT", _FROM_1),
+], ids=["duplicate_seeds", "seeds_outside_the_graph", "zero_hops", "cycle",
+        "int_seeds_over_bigint_edges"])
+def test_khop_venues_agree(spark, monkeypatch, seeds, hops, edge_type,
+                           want):
+    """Both venues return the same rows and schema; node takes the
+    widened type of the INT seeds and the edges' dst."""
+    e = spark.createDataFrame(_RING, f"src {edge_type}, dst {edge_type}")
+    s = spark.createDataFrame([(n,) for n in seeds], "node INT")
+    got = _in_both_venues(monkeypatch,
+                          lambda: khop_distances(e, s, max_hops=hops))
+    assert got["driver"] == got["distributed"] == (
+        want, f"struct<node:{edge_type.lower()},dist:int>")
+
+
+def test_khop_small_graph_runs_no_hop_join(spark, chain_graph):
+    """At or under KHOP_DRIVER_ROWS both cuts are collected and the
+    hops run on the driver: no hop join is planned, and the call costs
+    its two cuts, their two collects and the result's read."""
+    seeds = spark.createDataFrame([(1,)], "node INT")
+    plans = new_plan_descriptions(
+        spark,
+        lambda: khop_distances(chain_graph, seeds, max_hops=4).collect())
+    assert not [p for p in plans if "BroadcastHashJoin" in p]
+    assert len(plans) <= 5
+
+
+def test_khop_releases_caches(spark, chain_graph, monkeypatch):
     """khop cuts its edge relation and every frontier and caches
     nothing, so repeated calls must not grow the cache manager — the
     regression guard for the cached-frontier leak that once inflated
     bench numbers (same shape as test_agreement_pins_no_cache_entries)."""
     seeds = spark.createDataFrame([(1,)], "node INT")
-    khop_distances(chain_graph, seeds, max_hops=3).collect()  # warm
-    before = cached_entries(spark)
-    for _ in range(3):
-        got = {r.node: r.dist for r in
-               khop_distances(chain_graph, seeds, max_hops=3).collect()}
-        assert got == {1: 0, 2: 1, 3: 2, 4: 3}
-    assert cached_entries(spark) == before
+    for venue in _venues(monkeypatch):
+        khop_distances(chain_graph, seeds, max_hops=3).collect()  # warm
+        before = cached_entries(spark)
+        for _ in range(3):
+            got = _distances(khop_distances(chain_graph, seeds, max_hops=3))
+            assert got == {1: 0, 2: 1, 3: 2, 4: 3}, venue
+        assert cached_entries(spark) == before, venue
 
 
 def _chain(spark, n: int):
@@ -229,7 +314,7 @@ def _largest_plan_description(spark, run) -> int:
     return max(map(len, new_plan_descriptions(spark, run)))
 
 
-def test_khop_plan_stays_flat_in_the_hop_count(spark):
+def test_khop_plan_stays_flat_in_the_hop_count(spark, distributed):
     """Cut frontiers keep every hop's plan one scan deep. A cached
     frontier embedded the plans of all earlier frontiers, so the
     largest plan description grew ~5x per hop (about 100x from 2 to 5
@@ -242,7 +327,7 @@ def test_khop_plan_stays_flat_in_the_hop_count(spark):
     assert size[5] <= 2 * size[2], size
 
 
-def test_khop_plans_no_sort_merge_join(spark):
+def test_khop_plans_no_sort_merge_join(spark, distributed):
     """Each hop broadcasts its frontier and settled set by their
     observed row counts. Planned from the cuts' compounding size
     estimates instead, every hop after the first was a SortMergeJoin
@@ -255,12 +340,12 @@ def test_khop_plans_no_sort_merge_join(spark):
     assert any("BroadcastHashJoin" in p for p in plans)
 
 
-def test_khop_eight_hops_on_a_chain(spark):
+def test_khop_eight_hops_on_a_chain(spark, monkeypatch):
     g = _chain(spark, 14)
     seeds = spark.createDataFrame([(1,)], "node INT")
-    got = {r.node: r.dist
-           for r in khop_distances(g, seeds, max_hops=8).collect()}
-    assert got == {n: n - 1 for n in range(1, 10)}
+    for venue in _venues(monkeypatch):
+        got = _distances(khop_distances(g, seeds, max_hops=8))
+        assert got == {n: n - 1 for n in range(1, 10)}, venue
 
 
 def test_copurchase_edges_support_threshold(spark):
@@ -597,6 +682,27 @@ def test_round_loops_return_holding_no_cache(spark, run):
     before = cached_entries(spark)
     assert run(spark).collect()
     assert cached_entries(spark) == before
+
+
+@pytest.mark.parametrize("cc", [duplicate_clusters, duplicate_clusters_star],
+                         ids=["duplicate_clusters", "duplicate_clusters_star"])
+def test_cc_rounds_plan_no_sort_merge_join(spark, cc):
+    """Every relation a CC round joins against its edges (labels,
+    neighbour minima, each star's minima, the final roots) holds at most
+    one row per node, so it is broadcast by the node count observed on
+    its loop's first cut. Planned from the cuts' compounding size
+    estimates instead, the rounds were SortMergeJoins (4 and 13 per
+    call on the sf0.01 near-duplicate pairs)."""
+    pairs = spark.createDataFrame(
+        [(a, a + 1) for a in range(1, 12)] + [(20, 21), (22, 21)],
+        "id_a INT, id_b INT")
+    got = []
+    plans = new_plan_descriptions(
+        spark, lambda: got.extend(cc(pairs).collect()))
+    assert {(r.doc_id, r.cluster_id) for r in got} == (
+        {(n, 1) for n in range(1, 13)} | {(20, 20), (21, 20), (22, 20)})
+    assert not [p for p in plans if "SortMergeJoin" in p]
+    assert any("BroadcastHashJoin" in p for p in plans)
 
 
 def _baskets(spark):
